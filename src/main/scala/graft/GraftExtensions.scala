@@ -9,7 +9,7 @@ import graft.functions.{ArrayDot, CmsEstimate, KllMergeAgg, KllQuantile, KllSket
   * Catalyst expressions to plain SQL users —
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * builder.withExtensions(new GraftExtensions) // a SparkSession builder
   * // or: .config("spark.sql.extensions", "graft.GraftExtensions")
   * spark.sql("SELECT array_dot(a, b), word_shingles(text, 3) FROM t")
   * }}}

@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Local-mode defaults are tuned for the harness box (local[32],
   * 128 GiB); on a real cluster the same settings translate directly:
   * AQE on, shuffle partitions sized to the parallelism actually
-  * available rather than Spark's legacy 200.
+  * available rather than Spark's legacy 200. [[local]] is the one
+  * session builder of every main, so the correctness gate (`Verify`)
+  * certifies the configuration the bench times.
   */
 object Sessions {
 
@@ -48,8 +50,7 @@ object Sessions {
 
   def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
             appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)

@@ -871,7 +871,7 @@ object Events {
   val all: Seq[Q] = Seq(
     Q("events_anomaly_mad", anomalyMad, Some(anomalyMadOracle)),
     Q("events_hll_overlap", hllOverlap, Some(hllOverlapOracle)),
-    Q("events_tumbling_window", tumbling, Some(tumblingOracle), bench = true),
+    Q("events_tumbling_window", tumbling, Some(tumblingOracle)),
     Q("events_wau_exact", wauExact, Some(wauOracle)),
     Q("events_pivot_dynamic", pivotDynamic, Some(pivotDynamicOracle)),
     Q("events_path_trigrams", pathTrigrams, Some(pathTrigramsOracle)),
@@ -881,8 +881,8 @@ object Events {
     Q("events_gap_islands", gapIslands, Some(gapIslandsOracle)),
     Q("ts_ohlc_resample", ohlcResample, Some(ohlcOracle)),
     Q("ts_seasonal_baseline", seasonalBaseline, Some(seasonalBaselineOracle)),
-    Q("events_sliding_window", sliding, Some(slidingOracle), bench = true),
-    Q("events_sessionize", sessionize, Some(sessionizeOracle), bench = true),
+    Q("events_sliding_window", sliding, Some(slidingOracle)),
+    Q("events_sessionize", sessionize, Some(sessionizeOracle)),
     Q("events_sessionize_builtin", sessionizeBuiltin, Some(sessionizeOracle)),
     Q("events_json_extract", jsonExtract, Some(jsonExtractOracle)),
     Q("events_json_struct", jsonStruct, Some(jsonStructOracle)),

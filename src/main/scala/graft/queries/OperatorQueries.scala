@@ -477,10 +477,10 @@ object OperatorQueries {
     Q("zorder_layout", zorderLayout, Some(zorderLayoutOracle)),
     Q("q_sql_surface", sqlSurface, Some(sqlSurfaceOracle)),
     Q("q_expectations", expectations, Some(expectationsOracle)),
-    Q("asof_last_purchase", asofLastPurchase, Some(asofOracle), bench = true),
+    Q("asof_last_purchase", asofLastPurchase, Some(asofOracle)),
     Q("asof_tolerance", asofTolerance, Some(asofToleranceOracle)),
     Q("range_join_clicks", rangeJoinClicks, Some(rangeJoinOracle)),
     Q("salted_revenue", saltedRevenue, Some(saltedOracle)),
-    Q("profile_lineitem", profileLineitem, Some(profileOracle), bench = true),
+    Q("profile_lineitem", profileLineitem, Some(profileOracle)),
     Q("profile_documents", profileDocuments, Some(profileDocumentsOracle)))
 }

@@ -5,19 +5,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** One registered engine query: a Spark implementation, an optional
-  * DuckDB oracle (ANSI SQL over the same parquet tables), a flag
-  * marking it part of the headline bench set, and `benchSkip` for
-  * protocol-certification queries that belong in the CORRECTNESS gate
-  * but not the timed bench (e.g. the full 18×5 AutoML grid: minutes
-  * of deliberate fold-fits that measure the protocol, not an
-  * operator). Skipped names are printed in the bench JSON so the
-  * exclusion is visible, never silent.
+  * DuckDB oracle (ANSI SQL over the same parquet tables), and
+  * `benchSkip` for protocol-certification queries that belong in the
+  * CORRECTNESS gate but not the timed bench (e.g. the full 18×5
+  * AutoML grid: minutes of deliberate fold-fits that measure the
+  * protocol, not an operator). Skipped names are printed in the bench
+  * JSON so the exclusion is visible, never silent.
   */
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    bench: Boolean = false,
     benchSkip: Boolean = false)
 
 /** Numeric-stability helpers shared by queries and their oracles.

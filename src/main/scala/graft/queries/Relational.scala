@@ -581,7 +581,7 @@ object Relational {
       |WHERE bal_rank <= 3""".stripMargin
 
   val all: Seq[Q] = Seq(
-    Q("q1_pricing_summary", q1PricingSummary, Some(q1Oracle), bench = true),
+    Q("q1_pricing_summary", q1PricingSummary, Some(q1Oracle)),
     Q("q_supplier_rank", qSupplierRank, Some(qSupplierRankOracle)),
     Q("q_window_range_frame", qWindowRangeFrame, Some(qWindowRangeOracle)),
     Q("q_unpivot_measures", qUnpivotMeasures, Some(qUnpivotOracle)),
@@ -597,8 +597,8 @@ object Relational {
     Q("q_window_running", qWindowRunning, Some(qWindowRunningOracle)),
     Q("q_window_rank", qWindowRank, Some(qWindowRankOracle)),
     Q("q_topk_per_group", qTopKPerGroup, Some(qTopKPerGroupOracle)),
-    Q("q3_segment_revenue", q3SegmentRevenue, Some(q3Oracle), bench = true),
-    Q("q5_regional_revenue", q5RegionalRevenue, Some(q5Oracle), bench = true),
+    Q("q3_segment_revenue", q3SegmentRevenue, Some(q3Oracle)),
+    Q("q5_regional_revenue", q5RegionalRevenue, Some(q5Oracle)),
     Q("q_semi_anti_orders", qSemiAnti, Some(qSemiAntiOracle)),
-    Q("q_top_revenue_orders", qTopRevenueOrders, Some(qTopRevenueOrdersOracle), bench = true))
+    Q("q_top_revenue_orders", qTopRevenueOrders, Some(qTopRevenueOrdersOracle)))
 }

@@ -44,7 +44,12 @@ private[queries] trait ScaleBase {
     * partition layout / core count (the r15 docs_clean_pipeline hash
     * regression). Integer arithmetic is order-free: the same value at
     * any core count, and bit-identical to the DuckDB oracle's mirror
-    * expression. Only for columns the driver hash-gates. */
+    * expression. Only for columns the gate hash-checks.
+    *
+    * `nCol` must count the rows `sumMicroCol` summed — `count(x)`,
+    * not `count(*)`, when x can be NULL — and the sum must be
+    * non-negative: Spark `DIV` truncates toward zero while DuckDB `//`
+    * floors, so the two engines differ on a negative numerator. */
   protected def microMean6(sumMicroCol: String, nCol: String): org.apache.spark.sql.Column =
     expr(s"CAST((2 * $sumMicroCol + $nCol) DIV (2 * $nCol) AS DOUBLE) / 1000000.0")
 }

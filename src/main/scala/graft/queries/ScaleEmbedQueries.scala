@@ -345,7 +345,8 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * scoring); `recall_ok` — pair recall ≥ 0.8 on the sampled pair
     * domain (full-corpus recall measured with probes=3 at the derived
     * k: 1.000/1.000/0.965 at sf0.001/0.01/0.1 (k=8) and 0.820 at the
-    * 20k-vector sf1 soak (k=16) — SemDedupProbe); `drop_sound` —
+    * 20k-vector sf1 soak (k=16) — the SemDedupProbe probe, last at
+    * commit c65748f); `drop_sound` —
     * every dropped doc is a vertex of some found pair; `partition_ok`
     * — kept + dropped = corpus (both FULL-corpus). The exact twin is
     * capped to a ~1000-vertex deterministic id-hash sample so the
@@ -360,10 +361,10 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     // UNCLAMPED above, with the KMeans fit sample-bounded and cell
     // routing two-level — see semDedupDerivedK). The
     // ~1250-vectors/cell target is the τ = 0.4 recall floor:
-    // SemDedupProbe at the sf1 soak measured recall 0.820/0.668/0.530
-    // at k = 16/32/64 — 66°-apart "duplicates" simply straddle fine
-    // clusters, so a low threshold caps how small cells may get
-    // (recall ≥ 0.8 ⇒ cells ≥ ~1250). The CANDIDATE VOLUME is thus
+    // SemDedupProbe (last at c65748f) at the sf1 soak measured recall
+    // 0.820/0.668/0.530 at k = 16/32/64 — 66°-apart "duplicates"
+    // simply straddle fine clusters, so a low threshold caps how small
+    // cells may get (recall ≥ 0.8 ⇒ cells ≥ ~1250). The CANDIDATE VOLUME is thus
     // recall-mandated (≈ n²·probes²/(2k) ≈ 0.28·n² at τ = 0.4) — but
     // volume is not wall-clock: the r9 carry-through + sliced-key
     // rewrite of semDedupPairsIndexed (vectors ride the cell

@@ -38,15 +38,17 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     // exact micro-unit accumulation (see ScaleBase.microMean6) instead
     // of round(avg(double)) so the result cannot depend on float
     // summation order (= partition layout / core count).
+    // Each mean divides by its own column's non-NULL count: an empty
+    // or zero-token document has NULL ratios and must not deflate it.
     withCols.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
-      sum(micro6(col("alpha_ratio"))).as("_sa"),
-      sum(micro6(col("stopword_ratio"))).as("_ss"),
-      sum(micro6(col("quality"))).as("_sq"))
+      sum(micro6(col("alpha_ratio"))).as("_sa"), count(col("alpha_ratio")).as("_na"),
+      sum(micro6(col("stopword_ratio"))).as("_ss"), count(col("stopword_ratio")).as("_ns"),
+      sum(micro6(col("quality"))).as("_sq"), count(col("quality")).as("_nq"))
       .select(col("source"), col("n_docs"),
-        microMean6("_sa", "n_docs").as("avg_alpha"),
-        microMean6("_ss", "n_docs").as("avg_stopword"),
-        microMean6("_sq", "n_docs").as("avg_quality"))
+        microMean6("_sa", "_na").as("avg_alpha"),
+        microMean6("_ss", "_ns").as("avg_stopword"),
+        microMean6("_sq", "_nq").as("avg_quality"))
   }
 
   val textQualityOracle: String = {
@@ -71,12 +73,12 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
        |      LEAST(1.0, stopword_ratio * 5.0) * 0.3, 6) AS quality
        |  FROM r)
        |SELECT source, COUNT(*) AS n_docs,
-       |  CAST((2 * SUM(CAST(ROUND(alpha_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(*))
-       |    // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS avg_alpha,
-       |  CAST((2 * SUM(CAST(ROUND(stopword_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(*))
-       |    // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS avg_stopword,
-       |  CAST((2 * SUM(CAST(ROUND(quality * 1000000.0, 0) AS BIGINT)) + COUNT(*))
-       |    // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS avg_quality
+       |  CAST((2 * SUM(CAST(ROUND(alpha_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(alpha_ratio))
+       |    // (2 * COUNT(alpha_ratio)) AS DOUBLE) / 1000000.0 AS avg_alpha,
+       |  CAST((2 * SUM(CAST(ROUND(stopword_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(stopword_ratio))
+       |    // (2 * COUNT(stopword_ratio)) AS DOUBLE) / 1000000.0 AS avg_stopword,
+       |  CAST((2 * SUM(CAST(ROUND(quality * 1000000.0, 0) AS BIGINT)) + COUNT(quality))
+       |    // (2 * COUNT(quality)) AS DOUBLE) / 1000000.0 AS avg_quality
        |FROM s GROUP BY source""".stripMargin
   }
 
@@ -854,9 +856,9 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     docs.join(keep, Seq("fp", "doc_id"), "left_semi")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(micro6(col("quality"))).as("_sq"))
+        sum(micro6(col("quality"))).as("_sq"), count(col("quality")).as("_nq"))
       .select(col("source"), col("n_docs"),
-        microMean6("_sq", "n_docs").as("avg_quality"))
+        microMean6("_sq", "_nq").as("avg_quality"))
   }
 
   val docsCleanPipelineOracle: String = {
@@ -895,8 +897,8 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
        |dedup AS (
        |  SELECT fp, MIN(doc_id) AS doc_id FROM kept GROUP BY fp)
        |SELECT source, COUNT(*) AS n_docs,
-       |  CAST((2 * SUM(CAST(ROUND(quality * 1000000.0, 0) AS BIGINT)) + COUNT(*))
-       |    // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS avg_quality
+       |  CAST((2 * SUM(CAST(ROUND(quality * 1000000.0, 0) AS BIGINT)) + COUNT(quality))
+       |    // (2 * COUNT(quality)) AS DOUBLE) / 1000000.0 AS avg_quality
        |FROM kept JOIN dedup USING (fp, doc_id)
        |GROUP BY source""".stripMargin
   }
@@ -1070,9 +1072,9 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     Q("text_quality", textQuality, Some(textQualityOracle)),
     Q("text_langid", textLangId, Some(textLangIdOracle)),
     Q("dedup_exact", dedupExact, Some(dedupExactOracle)),
-    Q("dedup_minhash", dedupMinHash, Some(dedupMinHashOracle), bench = true),
-    Q("dedup_simhash", dedupSimHash, Some(dedupSimHashOracle), bench = true),
-    Q("dedup_embedding", dedupEmbedding, Some(dedupEmbeddingOracle), bench = true),
+    Q("dedup_minhash", dedupMinHash, Some(dedupMinHashOracle)),
+    Q("dedup_simhash", dedupSimHash, Some(dedupSimHashOracle)),
+    Q("dedup_embedding", dedupEmbedding, Some(dedupEmbeddingOracle)),
     Q("dedup_embedding_lsh", dedupEmbeddingLsh, Some(dedupEmbeddingLshOracle)),
     Q("dedup_embedding_auto", dedupEmbeddingAuto, Some(dedupEmbeddingAutoOracle)),
     Q("dedup_embedding_planted", dedupEmbeddingPlanted,
@@ -1080,7 +1082,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     Q("dedup_semantic", dedupSemantic, Some(dedupSemanticOracle)),
     Q("dedup_semantic_incremental", dedupSemanticIncremental,
       Some(dedupSemanticIncrementalOracle)),
-    Q("knn_brute", knnBrute, Some(knnBruteOracle), bench = true),
+    Q("knn_brute", knnBrute, Some(knnBruteOracle)),
     Q("knn_lsh", knnLsh, Some(knnLshOracle)),
     Q("knn_sq8", knnSq8, Some(knnSq8Oracle)),
     // the two non-prebuilt quantized rows are BUILD-certification
@@ -1118,7 +1120,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     Q("text_containment", textContainment, Some(textContainmentOracle)),
     Q("dedup_components", dedupComponents, Some(dedupComponentsOracle)),
     Q("dedup_survivorship", dedupSurvivorship, Some(dedupSurvivorshipOracle)),
-    Q("dedup_pipeline", dedupPipeline, Some(dedupPipelineOracle), bench = true),
+    Q("dedup_pipeline", dedupPipeline, Some(dedupPipelineOracle)),
     Q("text_vocabulary", textVocabulary, Some(textVocabularyOracle)),
     Q("emb_mutual_knn_clusters", embMutualKnnClusters,
       Some(embMutualKnnClustersOracle)),
@@ -1132,6 +1134,5 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     Q("dedup_fingerprint", dedupFingerprint, Some(dedupFingerprintOracle)),
     Q("events_stratified_sample", stratifiedSample, Some(stratifiedSampleOracle)),
     Q("docs_clean_pipeline", docsCleanPipeline, Some(docsCleanPipelineOracle)),
-    Q("docs_curation_e2e", docsCurationE2e, Some(docsCurationE2eOracle),
-      bench = true))
+    Q("docs_curation_e2e", docsCurationE2e, Some(docsCurationE2eOracle)))
 }

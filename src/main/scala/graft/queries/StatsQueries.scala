@@ -415,23 +415,23 @@ object StatsQueries {
 
   val all: Seq[Q] = Seq(
     Q("d1_hist_quantity", histQuantity,
-      Some(Histogram.oracleSql("lineitem", "l_quantity")), bench = true),
+      Some(Histogram.oracleSql("lineitem", "l_quantity"))),
     Q("d1_hist_price", histPrice,
       Some(Histogram.oracleSql("lineitem", "l_extendedprice"))),
     Q("d2_scatter_sample", scatterSample, Some(scatterOracle)),
     Q("d4_group_series", groupSeries, Some(groupSeriesOracle)),
-    Q("d3_corr_lineitem", corrLineitem, Some(corrOracle), bench = true),
+    Q("d3_corr_lineitem", corrLineitem, Some(corrOracle)),
     Q("d1_hist_all", histAll, Some(histAllOracle)),
     Q("d3_corr_matrix", corrMatrix, Some(corrMatrixOracle)),
     Q("d5_acf_events", acfEvents,
-      Some(Acf.oracleSql("events", "user_id", "value", 10)), bench = true),
+      Some(Acf.oracleSql("events", "user_id", "value", 10))),
     Q("d5_acf_agg", acfEventsAgg,
       Some(Acf.oracleSql("events", "user_id", "value", 10))),
     Q("d7_eval_metrics", evalMetrics, Some(evalMetricsOracle)),
     Q("p1_null_audit", nullAudit, Some(nullAuditOracle)),
     Q("p7_distinct_event_types", distinctEventTypes, Some(distinctOracle)),
     Q("w1_split_counts", splitCounts, Some(splitCountsOracle)),
-    Q("w2_window_stats", windowStats, Some(windowStatsOracle), bench = true),
+    Q("w2_window_stats", windowStats, Some(windowStatsOracle)),
     Q("ts_rolling_features", rollingFeatures, Some(rollingOracle)),
     Q("ts_ewma", ewmaSeries, Some(ewmaOracle)),
     Q("ts_holt_trend", holtSeries, Some(holtOracle)),

@@ -1265,10 +1265,10 @@ object Similarity {
   /** Probe fraction of the knn COST ROUTER's IVF tier — HIGHER than
     * the standalone derived tier's 0.35: the router's output is a
     * default (callers did not pick an ANN tier deliberately), so it
-    * certifies recall ≥ 0.9, and the sweep (IvfProbeFracSweep)
-    * measured 0.35 → 0.82-0.88 vs 0.6 → 0.96-1.00 across
-    * sf0.001/0.01/0.1/sf1 — 0.6 holds the floor with ≥ 0.06 margin
-    * at every measured scale. */
+    * certifies recall ≥ 0.9, and the sweep (the IvfProbeFracSweep
+    * probe, last at commit 2da988d) measured 0.35 → 0.82-0.88 vs
+    * 0.6 → 0.96-1.00 across sf0.001/0.01/0.1/sf1 — 0.6 holds the
+    * floor with ≥ 0.06 margin at every measured scale. */
   val knnAutoProbeFrac = 0.6
 
   // ---- kNN graph (corpus-vs-corpus top-k) --------------------------------
@@ -1459,7 +1459,8 @@ object Similarity {
     * descent converges geometrically — SimilaritySpec pins recall
     * ≥ 0.9 on a planted-cluster fixture. On the harness's SYNTHETIC
     * fabric the vectors are near-uniform in 64 dims (measured mean
-    * top-1 cos ≈ 0.45 against a 0.0 random baseline — KnnGraphProbe)
+    * top-1 cos ≈ 0.45 against a 0.0 random baseline — the
+    * KnnGraphProbe probe, last at commit 1d73fd6)
     * and there is provably no locality for ANY linear-candidate
     * method to exploit: measured top-5 recall decays 0.85 → 0.37 as
     * n grows 2k → 20k, rounds lifting the seed 0.29 → 0.37 at 20k.

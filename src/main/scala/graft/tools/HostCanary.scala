@@ -3,8 +3,8 @@ package graft.tools
 /** Fixed-work host-speed canary (r12 verdict #1b): host drift — not
   * code — produced five 1.7-3.2× phantom regressions in the r12
   * round-over-round read (judge-verified as drift for knn_ivf by A/B
-  * against r11 HEAD). Both bench mains time these two probes before
-  * their query loops and emit them in the artifact, so a future
+  * against r11 HEAD). [[graft.Bench]] times these probes before its
+  * query loop and emits them in the artifact, so a future
   * delta can be normalized against the host's measured speed THAT
   * sitting instead of adjudicated by a fresh worktree A/B:
   *

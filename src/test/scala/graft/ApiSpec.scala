@@ -29,6 +29,17 @@ class ApiSpec extends SparkSpec {
     assert(corr("x") == 1.0) // x and y are perfectly correlated
   }
 
+  test("correlations: a constant numeric feature gets a NULL r") {
+    val s = AnalysisSession(TaskConfig("t"))
+      .withTrainFrame(Seq((1L, 10.0, 100.0, 1.0), (2L, 20.0, 100.0, 2.0),
+        (3L, 30.0, 100.0, 3.5)).toDF("_row_id", "x", "k", "y"))
+      .setSupervisedOptions("y", Nil)
+    val corr = s.correlations.collect()
+      .map(r => r.getString(0) -> Option(r.get(1))).toMap
+    assert(corr("k").isEmpty) // pandas corrwith: NaN
+    assert(corr("x").isDefined)
+  }
+
   test("histogramOf returns bins covering all rows") {
     val h = session().histogramOf("x").agg(sum("cnt")).head().getLong(0)
     assert(h == 6)

@@ -40,6 +40,16 @@ class MicroMeanSpec extends SparkSpec with ScaleBase {
     assert(got == Seq(642259L, 999999L, 0L, 1000000L, 532100L))
   }
 
+  test("microMean6 over count(col) skips NULL rows; an all-NULL group is NULL") {
+    val df = spark.createDataFrame(Seq(("a", Some(0.2)), ("a", None),
+      ("a", Some(0.4)), ("b", None))).toDF("g", "v")
+    val got = df.groupBy("g")
+      .agg(sum(micro6(col("v"))).as("s"), count(col("v")).as("n"))
+      .select(col("g"), microMean6("s", "n").as("m"))
+      .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
+    assert(got == Map("a" -> Some(0.3), "b" -> None))
+  }
+
   test("microMean6 agrees with round(avg, 6) away from ties") {
     val vals = Seq(0.123456, 0.234567, 0.345678, 0.456789, 0.567891)
     val df = spark.createDataFrame(vals.map(Tuple1(_))).toDF("v")
