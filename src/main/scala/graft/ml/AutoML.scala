@@ -6,7 +6,7 @@ import org.apache.spark.ml.evaluation.{Evaluator, MulticlassClassificationEvalua
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.regression.{GBTRegressor, RandomForestRegressor}
-import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
+import org.apache.spark.ml.tuning.{CrossValidatorModel, FoldParallelCrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,16 +20,23 @@ import org.apache.spark.sql.functions._
   *    RF / SVM present but default-off exactly like the reference's
   *    commented-out zoo (auto_machine_learning.py:63-76);
   *  - grid 18 combos × 5 folds, argmax CV metric, winner refit on the
-  *    full train set — `CrossValidator` does the refit natively;
+  *    full train set — `FoldParallelCrossValidator` (Spark's
+  *    `CrossValidator` with a concurrent `fit`) does the refit;
   *  - scaler fit on train only, reused at test time — it lives inside
   *    the Pipeline so `CrossValidatorModel.transform(test)` replays
   *    train-time statistics (data_analysis.py:160 semantics);
   *  - equivalence is protocol + metric-level, not bit-level
   *    (SURVEY.md §8.7): fold assignment and tree internals differ.
   *
-  * Scale: the 90 fold-fits are embarrassingly parallel —
-  * `parallelism` fans them out over the cluster, the knob the
-  * single-threaded reference lacks (SURVEY.md §3 entry 2).
+  * Scale: the reference fits its 90 fold fits one by one. Spark's own
+  * `CrossValidator` walks the folds in turn and fans out only the
+  * combos inside one fold, so a 1-combo grid ran fully serial. Here all
+  * `numFolds × |grid|` fold fits share one pool of `parallelism`
+  * threads, and a 1-combo grid's refit runs alongside them (its winner
+  * is known up front). The cost is memory: every fold with a fit in
+  * flight keeps its (train, validation) pair cached — up to
+  * `numFolds` copies of the input instead of one — each released when
+  * that fold's last fit ends (SURVEY.md §3 entry 2).
   */
 object AutoML {
 
@@ -141,7 +148,7 @@ object AutoML {
       try modelZoo(mode, quick).filter(_.enabled).map { entry =>
         val pipeline = new Pipeline()
           .setStages(Array(assembler, scaler, entry.estimator))
-        val cv = new CrossValidator()
+        val cv = new FoldParallelCrossValidator()
           .setEstimator(pipeline)
           .setEvaluator(evaluator(mode))
           .setEstimatorParamMaps(entry.grid)

@@ -208,8 +208,10 @@ object MlQueries {
     * CORRECTNESS_r13 artifact): the cost is per-boosting-iteration
     * scheduling (each of the ~53-avg iterations of a fold-fit is
     * several barriered jobs broadcasting the growing ensemble), NOT
-    * data volume — and CrossValidator runs folds sequentially, so the
-    * five (maxIter=100, depth=10) fold chains serialize. Two fixes,
+    * data volume — and Spark's CrossValidator ran the folds
+    * sequentially, so the five (maxIter=100, depth=10) fold chains
+    * serialized (AutoML's FoldParallelCrossValidator now runs them
+    * concurrently). Two fixes,
     * both judge-endorsed: (a) the sample is now CORPUS-DERIVED
     * (count/150 modulus → ~150 rows at EVERY SF; the old %97 grew
     * 10× per SF) — the protocol witnesses (grid size, per-combo
@@ -255,10 +257,9 @@ object MlQueries {
         // stamp written LAST, stale stamp removed FIRST (the
         // dfLoadOrBuild crash-consistency rule)
         java.nio.file.Files.deleteIfExists(stampFile.toPath)
-        // parallelism 18 = one wave per fold: the grid is 18 combos,
-        // and the heavy (maxIter=100, depth=10) chains bound the fold
-        // wall — a 16-wide pool would serialize the two leftovers
-        // after the first wave
+        // parallelism 18: at most 18 of the 90 fold fits in flight,
+        // one fold's worth; the heavy (maxIter=100, depth=10) chains
+        // bound the wall
         val trained = AutoML.train(li, "l_extendedprice",
           Seq("l_quantity", "l_discount", "l_tax"),
           AutoML.Regression, numFolds = 5, parallelism = 18,

@@ -1,5 +1,16 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.classification.GBTClassifier
+import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
+import org.apache.spark.ml.regression.{GBTRegressor, LinearRegression, LinearRegressionModel}
+import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, FoldParallelCrossValidator, ParamGridBuilder}
+import org.apache.spark.ml.util.Identifiable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.api.{AnalysisSession, TaskConfig}
 import graft.ml.AutoML
@@ -84,8 +95,6 @@ class AutoMLSpec extends SparkSpec {
   }
 
   test("M5: the default-off rf zoo entry trains when enabled explicitly") {
-    import org.apache.spark.ml.Pipeline
-    import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
     val rf = AutoML.modelZoo(AutoML.Regression, quick = true)
       .find(_.name == "rf").get
     val df = cmapss().filter($"engine_no" <= 2)
@@ -156,4 +165,126 @@ class AutoMLSpec extends SparkSpec {
     assert(rep.getAs[Long]("tp") + rep.getAs[Long]("fp") +
       rep.getAs[Long]("fn") + rep.getAs[Long]("tn") == preds.count())
   }
+
+  // ---- FoldParallelCrossValidator: the one CV path of AutoML.train ----
+
+  private val sensors = Array("sensor_2", "sensor_7")
+
+  /** cmapss() with a 0/1 `failing` label, a double `label` for `mode`
+    * and a row `id` (0 until 180). */
+  private def labelled(mode: AutoML.Mode) = cmapss().drop("sensor_16")
+    .withColumn("failing", when($"RUL" < 20, 1.0).otherwise(0.0))
+    .withColumn("label", (if (mode == AutoML.Regression) $"RUL" else $"failing")
+      .cast("double"))
+    .withColumn("id", ($"engine_no" - 1) * 60 + $"time_in_cycles" - 1)
+
+  for (mode <- Seq(AutoML.Regression, AutoML.Classification); combos <- Seq(1, 2))
+    test(s"fold-parallel CV equals Spark's CrossValidator: ${mode.label}, $combos-combo grid") {
+      val df = labelled(mode)
+      val gbt = AutoML.modelZoo(mode, quick = true).find(_.name == "gbt").get.estimator
+      val depth = gbt match {
+        case g: GBTRegressor => g.maxDepth
+        case g: GBTClassifier => g.maxDepth
+      }
+      val pipeline = new Pipeline().setStages(Array(
+        new VectorAssembler().setInputCols(sensors).setOutputCol("features_raw"),
+        new StandardScaler().setInputCol("features_raw")
+          .setOutputCol("features_scaled").setWithMean(true).setWithStd(true),
+        gbt))
+      val grid = new ParamGridBuilder().addGrid(depth, Seq(3, 2).take(combos)).build()
+      def fit(cv: CrossValidator) = cv.setEstimator(pipeline)
+        .setEvaluator(AutoML.evaluator(mode)).setEstimatorParamMaps(grid)
+        .setNumFolds(3).setParallelism(4).setSeed(42).fit(df)
+      val reference = fit(new CrossValidator())
+      val ours = fit(new FoldParallelCrossValidator())
+
+      def bits(m: CrossValidatorModel) =
+        m.avgMetrics.toSeq.map(java.lang.Double.doubleToLongBits)
+      assert(ours.avgMetrics.length == combos)
+      assert(bits(ours) == bits(reference))
+      def predictions(m: CrossValidatorModel) =
+        m.transform(df).orderBy("id").select("prediction").collect().toSeq
+      assert(predictions(ours) == predictions(reference))
+
+      val dir = java.nio.file.Files.createTempDirectory("graft-fpcv").toString + "/m"
+      ours.write.save(dir)
+      val loaded = CrossValidatorModel.load(dir)
+      def grids(m: CrossValidatorModel) = m.getEstimatorParamMaps.toSeq
+        .map(_.toSeq.map(p => (p.param.parent, p.param.name, p.value)).toSet)
+      assert(loaded.getNumFolds == 3)
+      assert(grids(loaded) == grids(ours))
+      assert(bits(loaded) == bits(ours))
+      assert(predictions(loaded) == predictions(ours))
+    }
+
+  for (combos <- Seq(1, 2))
+    test(s"fold-parallel CV rethrows a failing fold fit and leaves no cache behind ($combos-combo grid)") {
+      val df = new VectorAssembler().setInputCols(sensors).setOutputCol("features")
+        .transform(labelled(AutoML.Regression))
+      val lr = new FailsWithoutRowZero()
+      val cv = new FoldParallelCrossValidator().setEstimator(lr)
+        .setEvaluator(new RegressionEvaluator())
+        .setEstimatorParamMaps(new ParamGridBuilder()
+          .addGrid(lr.regParam, Seq(0.0, 0.1).take(combos)).build())
+        .setNumFolds(3).setParallelism(4).setSeed(42)
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.size
+      val e = intercept[IllegalStateException](cv.fit(df))
+      assert(e.getMessage == FailsWithoutRowZero.Message)
+      assert(sc.getPersistentRDDs.size == before)
+    }
+
+  test("fold fits and the refit run every job under the caller's local properties") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e.properties)
+    }
+    val label = "graft.spec.label"
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("automl-spec", "fold fan-out")
+      sc.setLocalProperty(label, "fanout")
+      try {
+        AutoML.train(cmapss(), "RUL", sensors.toSeq, AutoML.Regression,
+          numFolds = 3, parallelism = 4, quick = true)
+        assert(sc.getLocalProperty(label) == "fanout") // caller's own props kept
+      } finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty(label, null)
+      }
+      // Listener events arrive in order: once the sentinel job is seen,
+      // every training job has been seen.
+      sc.setLocalProperty(label, "sentinel")
+      try sc.parallelize(1 to 2).count()
+      finally sc.setLocalProperty(label, null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_.getProperty(label) == "sentinel") &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+
+    val jobs = seen.asScala.toSeq.takeWhile(_.getProperty(label) != "sentinel")
+    assert(seen.asScala.exists(_.getProperty(label) == "sentinel"))
+    assert(jobs.size >= 4) // at least one job per fold fit and the refit
+    jobs.foreach { p =>
+      assert(p.getProperty(label) == "fanout")
+      assert(p.getProperty("spark.jobGroup.id") == "automl-spec")
+      assert(p.getProperty("spark.job.description") == "fold fan-out")
+    }
+  }
+}
+
+/** Linear regression that throws when its training set lacks row
+  * `id = 0` — true of exactly one cross-validation fold, and of no
+  * refit on the full set. Top-level so `defaultCopy` can build it. */
+class FailsWithoutRowZero(override val uid: String) extends LinearRegression(uid) {
+  def this() = this(Identifiable.randomUID("failsWithoutRowZero"))
+  override protected def train(dataset: Dataset[_]): LinearRegressionModel = {
+    if (dataset.filter("id = 0").isEmpty) throw new IllegalStateException(FailsWithoutRowZero.Message)
+    super.train(dataset)
+  }
+}
+
+object FailsWithoutRowZero {
+  val Message = "training set without row 0"
 }
