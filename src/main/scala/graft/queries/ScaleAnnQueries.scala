@@ -90,7 +90,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * Bound 0.9 (raised from the static-era 0.5 once derivation
     * landed — r6 ADVICE). The chosen plane/table counts are result
     * columns read from the provenance stamp
-    * ([[Similarity.lshParamsOf]]); the oracle recomputes them from
+    * ([[Similarity.routeOf]]); the oracle recomputes them from
     * COUNT(*) — reverting to static or single-probe sizing throws
     * here and hash-mismatches there. */
   def knnLsh(s: SparkSession, d: String): DataFrame = {
@@ -98,8 +98,9 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     val q = emb.filter(col("vec_id") < 10)
     val approx =
       Similarity.knnLshDerived(emb, "vec_id", "embedding", q, k = 5, dim = 64)
-    val p = Similarity.lshParamsOf(approx).getOrElse(throw new IllegalStateException(
-      "knn_lsh must use the corpus-derived LSH path"))
+    val p = Similarity.routeOf(approx).flatMap(_.lsh).getOrElse(
+      throw new IllegalStateException(
+        "knn_lsh must use the corpus-derived LSH path"))
     knnCertify(
       approx,
       Similarity.knnBrute(emb, "vec_id", "embedding", q, k = 5),
@@ -658,8 +659,8 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * can never repay an index build; an amortized call (reuse=100
     * query batches over the index lifetime) routes to whichever
     * indexed tier the BYTES-SCANNED model
-    * ([[Similarity.knnRouteCosts]]) prices cheaper — derived-IVF
-    * where the corpus is small enough that float scans win (the PQ
+    * ([[Similarity.knnFilteredRouteCosts]]) prices cheaper —
+    * derived-IVF where the corpus is small enough that float scans win (the PQ
     * LUT overhead prices it out), IVF-PQ once the float scan
     * dominates (the production serving tier at 100 TB: the probed
     * scan reads 8-byte codes, 64× under dim-64 floats) — and must
@@ -804,7 +805,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
 
   /** Corpus-wide kNN GRAPH, cost-routed
     * ([[Similarity.knnGraphAuto]]): every vector's top-5 cosine
-    * neighbors. Below the [[Similarity.knnGraphRouteBrute]] boundary
+    * neighbors. Below the [[Similarity.knnGraphRouteCosts]] boundary
     * (brute n² vs descent ~2786·n dots, 1.2× hurdle — all harness
     * SFs land here) the graph is EXACT and the oracle replays every
     * row plus the routing decision from COUNT(*); above it the
@@ -860,8 +861,8 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       Similarity.knnGraphAuto(base, "vec_id", "embedding", k = 5)
         .select("query_id", "neighbor_id", "cos"))
     val nBase = n - batch.count()
-    val baseRoute =
-      if (Similarity.knnGraphRouteBrute(nBase, 5)) "brute" else "descent"
+    val baseRoute = Similarity.routeLadder(
+      Similarity.knnGraphRouteCosts(nBase, 5), Similarity.knnRouteMinAdvantage)
     Similarity.knnGraphAddBatch(baseGraph, base, batch,
       "vec_id", "embedding", k = 5)
       .withColumn("base_route", lit(baseRoute))
@@ -923,7 +924,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * vectors each get 7 deterministic perturbed twins (id + j·10⁷,
     * v′ᵢ = vᵢ + 0.02·j·v₍ᵢ mod d₎₊₁, j = 1..7 — in-family cos ≥
     * 0.99): 500 + 3,500 twins push the corpus past the
-    * [[Similarity.knnGraphRouteBrute]] boundary at EVERY gate SF
+    * [[Similarity.knnGraphRouteCosts]] boundary at EVERY gate SF
     * (4,000 > 3,344 even at sf0.001), so
     * [[Similarity.knnGraphAuto]] runs the IVF-seeded NN-Descent path
     * end-to-end in-gate — while the soak corpus grows by a bounded
@@ -1054,9 +1055,9 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * in both reuse regimes like `knn_auto`: one-shot routes
     * brute-over-filtered (witnessed row-identical to the exact
     * filtered twin); amortized (reuse=100) routes by the
-    * THREE-WAY bytes-scanned model ([[Similarity.knnFilteredRoute]]
-    * — r13: brute / float IVF / IVF×SQ8 code scan), which lands the
-    * broad filter on the QUANTIZED tier at every gate SF — the
+    * bytes-scanned model ([[Similarity.knnFilteredRouteCosts]] —
+    * r13: brute / float IVF / IVF×SQ8 / IVF×PQ code scans), which
+    * lands the broad filter on the QUANTIZED tier at every gate SF — the
     * probed scan reads int8 codes (8× fewer bytes) with the LeftSemi
     * upstream, then float-re-ranks the derived pool. The filter's
     * SELECTIVITY, measured by COUNT(*), is a router input, and the
@@ -1114,8 +1115,8 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       .select(col("n_queries"), col("k"), col("n_exact"),
         lit(n).as("n_corpus"), lit(nF).as("n_filtered"),
         lit(p.nList).as("n_list"), lit(p.nProbe).as("n_probe"),
-        lit(Similarity.knnFilteredRouteOf(one).get).as("route_one"),
-        lit(Similarity.knnFilteredRouteOf(many).get).as("route_many"),
+        lit(Similarity.routeOf(one).get.chosen).as("route_one"),
+        lit(Similarity.routeOf(many).get.chosen).as("route_many"),
         (col("n_one_common") === col("n_exact")).as("one_exact_ok"),
         col("recall_ok"), col("ranks_dense"))
   }

@@ -84,8 +84,9 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     // recomputes them from COUNT(*) with the same arithmetic — a
     // future caller silently reverting to static plane counts loses
     // the stamp and this throws before any rows flow.
-    val p = Similarity.lshParamsOf(approx).getOrElse(throw new IllegalStateException(
-      "dedup_embedding_lsh must use the corpus-derived LSH path"))
+    val p = Similarity.routeOf(approx).flatMap(_.lsh).getOrElse(
+      throw new IllegalStateException(
+        "dedup_embedding_lsh must use the corpus-derived LSH path"))
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(notInExact.agg(count(lit(1)).as("n_bad")))
       .crossJoin(common.agg(count(lit(1)).as("n_common")))
@@ -179,11 +180,13 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     // discipline, [[embSample]]); the routed EXECUTION is pinned on
     // the sample, where the oracle can recompute the exact output
     val pFull = Similarity.lshDerivedParams(n, 0.4)
-    val routedFull = Similarity.lshWorthIt(n, pFull)
+    // 3.0: nearDupPairsAuto's default hurdle
+    val routedFull =
+      Similarity.routeLadder(Similarity.nearDupPairsCosts(n, pFull), 3.0) == "lsh"
     val (sampled, _) = embSample(emb, n)
     val auto = Similarity.nearDupPairsAuto(sampled, "vec_id", "embedding",
       threshold = 0.4, dim = 64)
-    val p = Similarity.lshParamsOf(auto).getOrElse(
+    val p = Similarity.routeOf(auto).flatMap(_.lsh).getOrElse(
       throw new IllegalStateException(
         "dedup_embedding_auto must come from the routed path"))
     val routedS = Similarity.lshRoutedOf(auto).getOrElse(
@@ -278,7 +281,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     val approx = Similarity.nearDupPairsLshDerived(corpus, "vec_id", "v",
       threshold = 0.9, dim = 64, targetBucket = 2L)
       .localCheckpoint(eager = false)
-    val p = Similarity.lshParamsOf(approx).getOrElse(
+    val p = Similarity.routeOf(approx).flatMap(_.lsh).getOrElse(
       throw new IllegalStateException(
         "dedup_embedding_planted must use the corpus-derived LSH path"))
     // the planted-pair truth is LINEAR: original joined to its twin

@@ -293,32 +293,6 @@ object Similarity {
     LshParams(planes, tables)
   }
 
-  /** Provenance stamp: the derived entry points record the
-    * [[LshParams]] they instantiated as metadata on the `cos` column,
-    * so any consumer (the gate queries pin this) can PROVE a frame
-    * came from the corpus-derived sizing rule rather than a caller
-    * quietly passing static plane counts — the exact mis-sizing class
-    * the derivation exists to prevent. Metadata rides the schema
-    * through select/filter/checkpoint, costs nothing at runtime. */
-  private def stampLshParams(df: DataFrame, p: LshParams): DataFrame = {
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("lsh_planes", p.numPlanes.toLong)
-      .putLong("lsh_tables", p.numTables.toLong)
-      .putLong("lsh_depth", p.probeDepth.toLong).build()
-    df.withColumn("cos", col("cos").as("cos", m))
-  }
-
-  /** The [[LshParams]] stamped by a derived entry point, or None for
-    * a frame that did not come from the derived path. */
-  def lshParamsOf(df: DataFrame): Option[LshParams] = {
-    val m = df.schema(df.schema.fieldIndex("cos")).metadata
-    if (m.contains("lsh_planes") && m.contains("lsh_tables"))
-      Some(LshParams(m.getLong("lsh_planes").toInt,
-        m.getLong("lsh_tables").toInt,
-        if (m.contains("lsh_depth")) m.getLong("lsh_depth").toInt else 1))
-    else None
-  }
-
   /** [[nearDupPairsLsh]] with corpus-derived sizing — the production
     * entry point (one extra count() pass; at 100 TB that's a
     * metadata-cheap scan vs a quadratically-mis-sized candidate join). */
@@ -327,9 +301,9 @@ object Similarity {
                              targetBucket: Long = 512L,
                              targetRecall: Double = 0.85): DataFrame = {
     val p = lshDerivedParams(emb.count(), threshold, targetBucket, targetRecall)
-    stampLshParams(
-      nearDupPairsLsh(emb, idCol, vecCol, threshold, dim,
-        p.numPlanes, p.numTables), p)
+    stamped(nearDupPairsLsh(emb, idCol, vecCol, threshold, dim,
+      p.numPlanes, p.numTables),
+      Route("nearDupPairsLshDerived", Nil, "lsh", lsh = Some(p)))
   }
 
   /** Expected candidate-pair volume of an LSH config under uniform
@@ -341,13 +315,16 @@ object Similarity {
     p.numTables.toDouble * n.toDouble * n.toDouble /
       (1L << math.min(p.numPlanes, 62)) / 2.0
 
-  /** The router's decision rule, exposed so the gate oracle can
-    * replay it: LSH must PREDICT at least `minAdvantage`× fewer
-    * candidates than brute to justify its hashing + explode + dedup
-    * overhead (measured at the 20k-vector soak: a predicted-1.1×
-    * config ran 1.56× SLOWER than brute end-to-end). */
-  def lshWorthIt(n: Long, p: LshParams, minAdvantage: Double = 3.0): Boolean =
-    lshPredictedCandidates(n, p) * minAdvantage <= n.toDouble * (n - 1).toDouble / 2.0
+  /** The pair router's priced tiers, exposed so the gate oracle can
+    * replay the decision: brute's n(n−1)/2 candidate pairs vs
+    * [[lshPredictedCandidates]]. Under [[routeLadder]] LSH must
+    * PREDICT at least `minAdvantage`× fewer candidates than brute to
+    * justify its hashing + explode + dedup overhead (measured at the
+    * 20k-vector soak: a predicted-1.1× config ran 1.56× SLOWER than
+    * brute end-to-end). */
+  def nearDupPairsCosts(n: Long, p: LshParams): Seq[(String, Double)] =
+    Seq("brute" -> n.toDouble * (n - 1).toDouble / 2.0,
+      "lsh" -> lshPredictedCandidates(n, p))
 
   /** Cost-routed near-duplicate pairs — the entry point a production
     * caller should use when the threshold is workload-driven rather
@@ -366,9 +343,9 @@ object Similarity {
     * that trade (bounded work, sub-1 recall) is a declared policy,
     * not a silent fallback, so it stays caller-opt-in.
     *
-    * The returned frame carries `lsh_routed` metadata on `cos`
-    * (true = LSH path, false = brute) plus the derived params, so a
-    * consumer can PROVE which plan ran.
+    * The returned frame carries its [[Route]] (priced tiers, chosen
+    * tier, derived params) on `cos`, so a consumer can PROVE which
+    * plan ran ([[routeOf]], [[lshRoutedOf]]).
     *
     * The measured decision boundary — refuse at τ=0.4 for every n,
     * take LSH at τ=0.8 from ~20k vectors (the sf1-soak A/B: 1.56×
@@ -383,41 +360,25 @@ object Similarity {
                        minAdvantage: Double = 3.0): DataFrame = {
     val n = emb.count()
     val p = lshDerivedParams(n, threshold, targetBucket, targetRecall)
-    val useLsh = lshWorthIt(n, p, minAdvantage)
-    val pairs =
-      if (useLsh) nearDupPairsLsh(emb, idCol, vecCol, threshold, dim,
-        p.numPlanes, p.numTables)
-      else nearDupPairs(emb, idCol, vecCol, threshold)
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("lsh_planes", p.numPlanes.toLong)
-      .putLong("lsh_tables", p.numTables.toLong)
-      .putBoolean("lsh_routed", useLsh).build()
-    pairs.withColumn("cos", col("cos").as("cos", m))
+    val tiers = nearDupPairsCosts(n, p)
+    val r = Route("nearDupPairsAuto", tiers, routeLadder(tiers, minAdvantage),
+      lsh = Some(p))
+    stamped(
+      if (r.chosen == "lsh") nearDupPairsLsh(emb, idCol, vecCol, threshold,
+        dim, p.numPlanes, p.numTables)
+      else nearDupPairs(emb, idCol, vecCol, threshold), r)
   }
 
-  /** The routing decision recorded by [[nearDupPairsAuto]], or None
-    * for frames from other entry points. */
-  def lshRoutedOf(df: DataFrame): Option[Boolean] = {
-    val m = df.schema(df.schema.fieldIndex("cos")).metadata
-    if (m.contains("lsh_routed")) Some(m.getBoolean("lsh_routed")) else None
-  }
-
-  /** Per-table collision probability of a τ-cosine pair under 1-bit
-    * MULTI-PROBE (query probes its bucket plus every single-flipped-
-    * plane neighbor): exact bucket match OR exactly one disagreeing
-    * plane — `c^p + p·c^(p−1)·(1−c)` with c = 1 − acos(τ)/π.
-    * (= [[lshMultiProbeTail]] at depth 1; kept as the named depth-1
-    * form the r9 artifacts and specs reference.) */
-  def lshMultiProbeP1(c: Double, planes: Int): Double =
-    math.pow(c, planes) + planes * math.pow(c, planes - 1) * (1.0 - c)
-
-  /** Per-table collision at probe depth D (the query probes every
-    * bucket within Hamming distance D of its own): the binomial tail
-    * `Σ_{i=0}^{D} C(p,i)·c^(p−i)·(1−c)^i`. Terms accumulate in
-    * ascending i with C(p,i) built by the left-assoc product
-    * `Π_j (p−j+1)/j` — the oracle replays the identical IEEE
-    * arithmetic term-for-term (D ≤ 3, so the SQL spells the four
-    * terms inline rather than trusting an engine list_sum order). */
+  /** Per-table collision probability of a τ-cosine pair under
+    * MULTI-PROBE at depth D (the query probes every bucket within
+    * Hamming distance D of its own), c = 1 − acos(τ)/π: the binomial
+    * tail `Σ_{i=0}^{D} C(p,i)·c^(p−i)·(1−c)^i` — at depth 1, exact
+    * bucket match OR exactly one disagreeing plane,
+    * `c^p + p·c^(p−1)·(1−c)`. Terms accumulate in ascending i with
+    * C(p,i) built by the left-assoc product `Π_j (p−j+1)/j` — the
+    * oracle replays the identical IEEE arithmetic term-for-term
+    * (D ≤ 3, so the SQL spells the four terms inline rather than
+    * trusting an engine list_sum order). */
   def lshMultiProbeTail(c: Double, planes: Int, depth: Int): Double = {
     var sum = 0.0
     var i = 0
@@ -520,9 +481,9 @@ object Similarity {
                     targetRecall: Double = 0.95): DataFrame = {
     val p = lshMultiProbeParams(emb.count(), minCos, targetBucket,
       targetRecall)
-    stampLshParams(
-      knnLsh(emb, idCol, vecCol, queries, k, dim, p.numPlanes, p.numTables,
-        multiProbe = true, probeDepth = p.probeDepth), p)
+    stamped(knnLsh(emb, idCol, vecCol, queries, k, dim, p.numPlanes,
+      p.numTables, multiProbe = true, probeDepth = p.probeDepth),
+      Route("knnLshDerived", Nil, "lsh", lsh = Some(p)))
   }
 
   /** IVF (inverted-file) ANN index: KMeans-partition the corpus into
@@ -935,29 +896,36 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", "cos")
   }
 
-  /** BYTES-SCANNED cost model for FILTERED kNN — [[knnRouteCosts]]'s
-    * discipline applied to the predicate-pushed tiers (r12 verdict
-    * #5: the r12 dot-count model knew only brute vs float IVF; at
-    * 100 TB the filtered scan should read codes like the unfiltered
-    * tiers do). All terms replayable from COUNT(*)s:
+  /** The BYTES-SCANNED cost model of both kNN routers, in ladder
+    * order (brute, ivf, ivf_sq8, ivf_pq). At corpus scale the binding
+    * constraint is IO/memory bandwidth, not multiplies: a float64 dot
+    * reads 8·dim bytes of corpus data while a PQ distance reads `m`
+    * code bytes (32-64× less), which is why IVF-PQ is the production
+    * serving tier. [[knnFilteredAuto]] prices all four tiers over the
+    * filtered rows; [[knnAuto]] is the `nFiltered = n` case without
+    * the SQ8 tier. All terms replayable from COUNT(*)s:
     *
     *  - brute-over-filtered: every batch scans the n_filtered float
     *    vectors — no build, the selective-filter winner;
-    *  - filtered float IVF: one FULL-corpus build (the index is
-    *    filter-agnostic — it serves every predicate), then per query
-    *    the routing dots plus the probed fraction OF THE FILTERED
-    *    ROWS in floats (the LeftSemi lands before scoring, so the
-    *    scan reads nProbe·n_filtered/nList expected rows);
-    *  - filtered IVF×SQ8: the build plus one corpus encode pass;
-    *    per query the probed filtered fraction in CODE bytes (dim,
-    *    8× under floats) and a [[pqDerivedRefine]] float re-rank.
+    *  - IVF: one FULL-corpus build (the index is filter-agnostic — it
+    *    serves every predicate) assigning n vectors at `assign`
+    *    routing dots each (nList flat, √-structured above
+    *    [[twoLevelCellThreshold]]), then per query the routing dots
+    *    plus the probed fraction OF THE FILTERED ROWS in floats (the
+    *    LeftSemi lands before scoring, so the scan reads
+    *    nProbe·n_filtered/nList expected rows);
+    *  - IVF×SQ8: the build plus one corpus encode pass; per query the
+    *    probed filtered fraction in CODE bytes (dim, 8× under floats)
+    *    and a [[pqDerivedRefine]] float re-rank;
+    *  - IVF×PQ: as SQ8, plus the per-query ks-entry/subspace LUT
+    *    build (dim·ks float muls), scanning `m` code bytes per probed
+    *    vector.
     *
     * Plain IEEE doubles in fixed operand order; DuckDB replays every
     * comparison bit-for-bit. */
   def knnFilteredRouteCosts(n: Long, nFiltered: Long, nQueries: Long,
                             reuse: Long, p: IvfParams, dim: Int,
-                            m: Int = 8, ks: Int = 256)
-      : (Double, Double, Double, Double) = {
+                            m: Int = 8, ks: Int = 256): Seq[(String, Double)] = {
     val fb = 8.0 * dim.toDouble
     val cb = dim.toDouble // SQ8: one byte per dimension
     val assign =
@@ -979,29 +947,7 @@ object Similarity {
     val pq = n.toDouble * assign * fb + n.toDouble * fb +
       q * (assign * fb + dim.toDouble * ks.toDouble * 8.0 +
         probedF * m.toDouble + refine * fb)
-    (brute, ivf, sq8, pq)
-  }
-
-  /** The filtered FOUR-way decision ("brute" | "ivf" | "ivf_sq8" |
-    * "ivf_pq"): an index tier must predict ≥ `minAdvantage`× fewer
-    * bytes than brute-over-filtered; a quantized tier must beat the
-    * float probe by the same factor; and PQ must beat SQ8 by it
-    * again to take the coarser codes (the simpler quantizer wins
-    * ties — [[knnAutoRoute]]'s discipline). So highly selective
-    * filters route brute, broad filters route an index, broad +
-    * amortized routes codes, and large-corpus broad + amortized —
-    * where the per-query LUT amortizes against the probed scan —
-    * routes PQ. Selectivity IS the router's input. */
-  def knnFilteredRoute(n: Long, nFiltered: Long, nQueries: Long,
-                       reuse: Long, p: IvfParams, dim: Int,
-                       minAdvantage: Double = 1.2): String = {
-    val (brute, ivf, sq8, pq) =
-      knnFilteredRouteCosts(n, nFiltered, nQueries, reuse, p, dim)
-    val bestIndexed = math.min(ivf, math.min(sq8, pq))
-    if (bestIndexed * minAdvantage > brute) "brute"
-    else if (math.min(sq8, pq) * minAdvantage <= ivf) {
-      if (pq * minAdvantage <= sq8) "ivf_pq" else "ivf_sq8"
-    } else "ivf"
+    Seq("brute" -> brute, "ivf" -> ivf, "ivf_sq8" -> sq8, "ivf_pq" -> pq)
   }
 
   /** FILTERED ANN over the QUANTIZED tier — [[knnIvfSq8Indexed]]
@@ -1100,9 +1046,14 @@ object Similarity {
     * "top-k nearest WHERE <pred>": routes between exact brute over
     * the filtered subset, the filter-pushed float IVF tier
     * ([[ivfSearchFiltered]]), and the filter-pushed QUANTIZED tiers
-    * ([[ivfSearchFilteredSq8]] / [[ivfSearchFilteredPq]]) by the
-    * bytes-scanned model ([[knnFilteredRoute]]). The `route` column
-    * records the decision for replay. `prebuiltCodes` /
+    * ([[ivfSearchFilteredSq8]] / [[ivfSearchFilteredPq]]) by
+    * [[routeLadder]] over the bytes-scanned model
+    * ([[knnFilteredRouteCosts]]): highly selective filters route
+    * brute, broad filters an index, broad + amortized the codes, and
+    * large-corpus broad + amortized — where the per-query LUT
+    * amortizes against the probed scan — PQ. Selectivity IS the
+    * router's input. The `route` column and the [[Route]] on `cos`
+    * record the decision for replay. `prebuiltCodes` /
     * `prebuiltPqCodes`+`prebuiltPqCb` are the persisted codes
     * artifacts of `prebuilt` (computed on demand when absent and the
     * route lands on that tier); codes are only meaningful with the
@@ -1134,13 +1085,15 @@ object Similarity {
       if (n == 0) 0
       else emb.select(size(col(vecCol))).head().getInt(0))
     val p = ivfDerivedParams(n, knnAutoProbeFrac)
-    val route = knnFilteredRoute(n, nF, nQ, reuse, p, dim)
+    val tiers = knnFilteredRouteCosts(n, nF, nQ, reuse, p, dim)
+    val r = Route("knnFilteredAuto", tiers,
+      routeLadder(tiers, knnRouteMinAdvantage), ivf = Some(p))
     // indexDir: the ivfCachedIndex memo discipline (Scaladoc there) —
     // a serving caller without prebuilt artifacts points every batch
     // at one dir and pays the KMeans/encode passes exactly once
     def index = prebuilt.getOrElse(
       ivfCachedIndex(spark, emb, idCol, vecCol, p, seed, n, dim, indexDir))
-    val res = route match {
+    val res = r.chosen match {
       case "brute" => knnBrute(filtered, idCol, vecCol, queries, k)
       case "ivf" =>
         ivfSearchFiltered(index, idCol, vecCol, queries, k, p.nProbe,
@@ -1177,24 +1130,7 @@ object Similarity {
         ivfSearchFilteredSq8(idx, codes, idCol, vecCol, queries, k,
           p.nProbe, pqDerivedRefine(n, p), filtered.select(col(idCol)))
     }
-    // provenance stamp (the knnAuto discipline): a consumer can PROVE
-    // which plan ran instead of re-deriving the decision — one
-    // combined metadata (a second .as() would replace the first)
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("ivf_nlist", p.nList.toLong)
-      .putLong("ivf_nprobe", p.nProbe.toLong)
-      .putString("knn_filtered_route", route).build()
-    res.withColumn("cos", col("cos").as("cos", m))
-      .withColumn("route", lit(route))
-  }
-
-  /** The routing decision recorded by [[knnFilteredAuto]] ("brute" |
-    * "ivf"), or None for frames from other entry points. */
-  def knnFilteredRouteOf(df: DataFrame): Option[String] = {
-    val m = df.schema(df.schema.fieldIndex("cos")).metadata
-    if (m.contains("knn_filtered_route"))
-      Some(m.getString("knn_filtered_route"))
-    else None
+    stamped(res, r).withColumn("route", lit(r.chosen))
   }
 
   /** One-shot convenience: build + search. */
@@ -1233,33 +1169,14 @@ object Similarity {
     IvfParams(nList, math.min(nProbe, nList))
   }
 
-  /** Provenance stamp for the derived-IVF entry points — mirror of
-    * [[stampLshParams]]: consumers prove a result came from the
-    * corpus-derived sizing, not a static knob. */
-  private def stampIvfParams(df: DataFrame, p: IvfParams): DataFrame = {
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("ivf_nlist", p.nList.toLong)
-      .putLong("ivf_nprobe", p.nProbe.toLong).build()
-    df.withColumn("cos", col("cos").as("cos", m))
-  }
-
-  def ivfParamsOf(df: DataFrame): Option[IvfParams] = {
-    val m = df.schema(df.schema.fieldIndex("cos")).metadata
-    if (m.contains("ivf_nlist") && m.contains("ivf_nprobe"))
-      Some(IvfParams(m.getLong("ivf_nlist").toInt,
-        m.getLong("ivf_nprobe").toInt))
-    else None
-  }
-
   /** [[knnIvf]] with corpus-derived sizing — the production entry
     * point (one count() pass buys a size-correct cell grid). */
   def knnIvfDerived(emb: DataFrame, idCol: String, vecCol: String,
                     queries: DataFrame, k: Int, seed: Long = 42L): DataFrame = {
     val n = emb.count()
     val p = ivfDerivedParams(n)
-    stampIvfParams(
-      knnIvf(emb, idCol, vecCol, queries, k, p.nList, p.nProbe, seed,
-        knownN = Some(n)), p)
+    stamped(knnIvf(emb, idCol, vecCol, queries, k, p.nList, p.nProbe, seed,
+      knownN = Some(n)), Route("knnIvfDerived", Nil, "ivf", ivf = Some(p)))
   }
 
   /** Probe fraction of the knn COST ROUTER's IVF tier — HIGHER than
@@ -1270,6 +1187,93 @@ object Similarity {
     * 0.6 → 0.96-1.00 across sf0.001/0.01/0.1/sf1 — 0.6 holds the
     * floor with ≥ 0.06 margin at every measured scale. */
   val knnAutoProbeFrac = 0.6
+
+  // ---- routing decision record -----------------------------------------
+
+  /** One routing decision, stamped on the result's `cos` column so a
+    * consumer can PROVE which plan ran instead of re-deriving it:
+    * `op` is the entry point that decided, `tiers` its priced tiers
+    * in ladder order (exact tier first; empty for a fixed-tier entry
+    * point, which prices nothing), `chosen` the tier that ran, and
+    * `lsh`/`ivf` the corpus-derived sizing it used. A frame from a
+    * static-knob path carries no record, so the gate queries that
+    * read it refuse a caller quietly bypassing the derivation. The
+    * record is schema metadata under one key: it rides select,
+    * filter, checkpoints and parquet round trips at no runtime
+    * cost. */
+  final case class Route(op: String, tiers: Seq[(String, Double)],
+                         chosen: String, lsh: Option[LshParams] = None,
+                         ivf: Option[IvfParams] = None)
+
+  /** The decision rule of every cost router: start on the exact tier
+    * and step to the next rung while some later rung predicts
+    * ≥ `minAdvantage`× less cost than the current one — so an indexed
+    * tier must clear the hurdle against brute, and each coarser tier
+    * against the one above it (ties keep the simpler tier). A rung
+    * whose cost is 0 is never left: an empty corpus, query set or
+    * filter, or a zero dim, routes exact. */
+  def routeLadder(tiers: Seq[(String, Double)], minAdvantage: Double): String = {
+    def best(from: Int) =
+      tiers.drop(from).map(_._2).reduce((a, b) => math.min(a, b))
+    var i = 0
+    while (i + 1 < tiers.length && tiers(i)._2 > 0.0 &&
+      best(i + 1) * minAdvantage <= tiers(i)._2) i += 1
+    tiers(i)._1
+  }
+
+  /** The kNN routers' hurdle (graph, filtered and default kNN). */
+  val knnRouteMinAdvantage = 1.2
+
+  private val RouteKey = "route"
+
+  private def stamped(df: DataFrame, r: Route): DataFrame = {
+    val b = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("op", r.op).putString("chosen", r.chosen)
+    if (r.tiers.nonEmpty) // an empty array would read back as Long[]
+      b.putStringArray("tiers", r.tiers.map(_._1).toArray)
+        .putDoubleArray("costs", r.tiers.map(_._2).toArray)
+    r.lsh.foreach(p => b.putLongArray("lsh",
+      Array(p.numPlanes.toLong, p.numTables.toLong, p.probeDepth.toLong)))
+    r.ivf.foreach(p => b.putLongArray("ivf",
+      Array(p.nList.toLong, p.nProbe.toLong)))
+    val m = new org.apache.spark.sql.types.MetadataBuilder()
+      .putMetadata(RouteKey, b.build()).build()
+    df.withColumn("cos", col("cos").as("cos", m))
+  }
+
+  /** The [[Route]] stamped on `df`, or None for a frame from a
+    * static-knob path. */
+  def routeOf(df: DataFrame): Option[Route] = {
+    val m = df.schema(df.schema.fieldIndex("cos")).metadata
+    if (!m.contains(RouteKey)) None
+    else {
+      val r = m.getMetadata(RouteKey)
+      def ints(key: String) =
+        if (r.contains(key)) Some(r.getLongArray(key).map(_.toInt)) else None
+      val tiers =
+        if (r.contains("tiers"))
+          r.getStringArray("tiers").toSeq.zip(r.getDoubleArray("costs"))
+        else Nil
+      Some(Route(r.getString("op"), tiers, r.getString("chosen"),
+        ints("lsh").map(a => LshParams(a(0), a(1), a(2))),
+        ints("ivf").map(a => IvfParams(a(0), a(1)))))
+    }
+  }
+
+  /** [[nearDupPairsAuto]]'s decision (true = LSH ran), or None for
+    * frames from other entry points. */
+  def lshRoutedOf(df: DataFrame): Option[Boolean] =
+    routeOf(df).filter(_.op == "nearDupPairsAuto").map(_.chosen == "lsh")
+
+  /** [[knnAuto]]'s decision as its ladder position (0 = brute,
+    * 1 = ivf, 2 = ivf_pq), or None for frames from other entry
+    * points. */
+  def knnRouteOf(df: DataFrame): Option[Int] =
+    routeOf(df).filter(_.op == "knnAuto")
+      .map(r => r.tiers.indexWhere(_._1 == r.chosen))
+
+  /** The IVF sizing a derived or routed entry point used. */
+  def ivfParamsOf(df: DataFrame): Option[IvfParams] = routeOf(df).flatMap(_.ivf)
 
   // ---- kNN graph (corpus-vs-corpus top-k) --------------------------------
 
@@ -1312,23 +1316,21 @@ object Similarity {
     * low-signal path NN-Descent's sampling drops anyway. */
   val knnGraphInDegreeCap = 4
 
-  /** Routing boundary for [[knnGraphAuto]], derived like
-    * [[knnAutoRoute]]'s: brute graph work is n² dot products,
-    * descent work ≈ (nProbe·512 seed + rounds·(5k)² descent)·n =
-    * 2786·n dots at k = 5 — descent must predict ≥ 1.2× fewer dots
+  /** Priced tiers of [[knnGraphAuto]]: brute graph work is n² dot
+    * products, descent work ≈ (nProbe·512 seed + rounds·(5k)²
+    * descent)·n = 2786·n dots at k = 5 — under [[routeLadder]] at
+    * [[knnRouteMinAdvantage]] descent must predict ≥ 1.2× fewer dots
     * to win, so brute holds while n ≤ 1.2·2786 ≈ 3343 (evaluated as
-    * the IEEE-exact inequality below, never pre-solved, so the
-    * DuckDB oracle replays the same expression from COUNT(*)).
-    * The honest consequence (same shape as the knn router's
+    * the IEEE-exact inequality, never pre-solved, so the DuckDB
+    * oracle replays the same expression from COUNT(*)). The honest
+    * consequence (same shape as the knn router's
     * one-shot-routes-brute finding): small corpora get the EXACT
     * graph — approximation only ever buys something once n clears
     * the seed's constant factor. */
-  def knnGraphRouteBrute(n: Long, k: Int): Boolean = {
-    val brute = n.toDouble * n.toDouble
-    val descent = n.toDouble * (3.0 * 512.0 +
-      knnGraphDescentRounds.toDouble * (5.0 * k).toDouble * (5.0 * k).toDouble)
-    brute <= 1.2 * descent
-  }
+  def knnGraphRouteCosts(n: Long, k: Int): Seq[(String, Double)] =
+    Seq("brute" -> n.toDouble * n.toDouble,
+      "descent" -> n.toDouble * (3.0 * 512.0 +
+        knnGraphDescentRounds.toDouble * (5.0 * k) * (5.0 * k)))
 
   /** Exact corpus-wide kNN graph — the brute tier of
     * [[knnGraphAuto]]: every vector against every other through a
@@ -1363,7 +1365,7 @@ object Similarity {
   }
 
   /** Cost-routed corpus-wide kNN graph: the exact brute tier below
-    * [[knnGraphRouteBrute]]'s boundary, the IVF-seeded NN-Descent
+    * [[knnGraphRouteCosts]]' boundary, the IVF-seeded NN-Descent
     * tier ([[knnGraph]]) above it. Output schema is identical in
     * both regimes; a `route` column records the decision so the
     * gate oracle can replay it from COUNT(*). */
@@ -1437,12 +1439,14 @@ object Similarity {
     require(k >= 1 && k <= 256,
       s"knnGraphAuto: k must be in [1, 256], got $k")
     val n = emb.count()
-    if (knnGraphRouteBrute(n, k))
-      knnGraphBrute(emb, idCol, vecCol, k).withColumn("route", lit("brute"))
-    else
-      knnGraph(emb, idCol, vecCol, k, seed, knownN = Some(n),
-        prebuilt = quantizer.map(f => f(n)))
-        .withColumn("route", lit("descent"))
+    val tiers = knnGraphRouteCosts(n, k)
+    val r = Route("knnGraphAuto", tiers,
+      routeLadder(tiers, knnRouteMinAdvantage), ivf = Some(knnGraphParams(n)))
+    stamped(
+      if (r.chosen == "brute") knnGraphBrute(emb, idCol, vecCol, k)
+      else knnGraph(emb, idCol, vecCol, k, seed, knownN = Some(n),
+        prebuilt = quantizer.map(f => f(n))), r)
+      .withColumn("route", lit(r.chosen))
   }
 
   /** Corpus-wide approximate kNN graph: every vector's top-k cosine
@@ -1629,103 +1633,12 @@ object Similarity {
         .localCheckpoint()
     }
     // final dense ranks from the aggregate's sorted output positions
-    stampIvfParams(
+    stamped(
       topK(g, "cos", k)
         .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
         .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-          col("e.id").as("neighbor_id"), col("e.score").as("cos")), p)
-  }
-
-  /** The knn router's cost model, exposed so the gate oracle can
-    * replay the decision from COUNT(*): predicted dot-products of
-    * brute (`reuse·|Q|·n`) vs one IVF build amortized over `reuse`
-    * query batches (`n·assign + reuse·|Q|·(assign + nProbe·n/nList)`,
-    * assign = per-vector routing dots — nList flat, √-structured
-    * above [[twoLevelCellThreshold]]). IVF must predict
-    * ≥ `minAdvantage`× fewer dots to win. The honest consequence:
-    * a ONE-SHOT small-batch knn routes to brute at every corpus size
-    * (at recall-0.9-mandated probe fractions a one-shot IVF cannot
-    * repay its build — the probed set is already 0.6·n per query);
-    * IVF wins exactly in the serving regime it exists for, where an
-    * index answers many batches ([[ivfSave]]/[[ivfLoad]] make reuse
-    * real). Plain IEEE-double arithmetic throughout so DuckDB
-    * replays the boolean bit-for-bit. */
-  def knnIvfWorthIt(n: Long, nQueries: Long, reuse: Long, p: IvfParams,
-                    minAdvantage: Double = 1.2): Boolean = {
-    val brute = reuse.toDouble * nQueries.toDouble * n.toDouble
-    val assign =
-      if (p.nList <= twoLevelCellThreshold) p.nList.toDouble
-      else {
-        val ck = math.ceil(math.sqrt(p.nList.toDouble))
-        ck + 3.0 * p.nList.toDouble / ck
-      }
-    val ivf = n.toDouble * assign + reuse.toDouble * nQueries.toDouble *
-      (assign + p.nProbe.toDouble * n.toDouble / p.nList.toDouble)
-    ivf * minAdvantage <= brute
-  }
-
-  /** Route codes of the three-regime knn router. */
-  val KnnRouteBrute = 0
-  val KnnRouteIvf = 1
-  val KnnRouteIvfPq = 2
-
-  /** BYTES-SCANNED cost model of the knn router's three regimes —
-    * the 100 TB extension of [[knnIvfWorthIt]]'s dot counts. At
-    * corpus scale the binding constraint is IO/memory bandwidth, not
-    * multiplies: a float64 dot reads 8·dim bytes of corpus data while
-    * a PQ distance reads `m` code bytes (32-64× less), which is why
-    * IVF-PQ is the production serving tier. Terms (all per the
-    * documented plan shapes):
-    *   - brute: every query batch scans all n float vectors;
-    *   - IVF: one build pass assigns n vectors (assign routing dots ×
-    *     float bytes), then each query reads its routing dots plus
-    *     the probed fraction of the corpus in FLOATS;
-    *   - IVF-PQ: the build additionally reads the corpus once to
-    *     encode; each query adds the ks-entry/subspace LUT build
-    *     (dim·ks float muls), scans the probed fraction in CODE BYTES
-    *     (m per vector), and exact-re-ranks a [[pqDerivedRefine]]
-    *     pool in floats.
-    * Plain IEEE doubles in fixed operand order so the SQL oracle
-    * replays every comparison bit-for-bit. */
-  def knnRouteCosts(n: Long, nQueries: Long, reuse: Long, p: IvfParams,
-                    dim: Int, m: Int = 8, ks: Int = 256)
-      : (Double, Double, Double) = {
-    val fb = 8.0 * dim.toDouble
-    val assign =
-      if (p.nList <= twoLevelCellThreshold) p.nList.toDouble
-      else {
-        val ck = math.ceil(math.sqrt(p.nList.toDouble))
-        ck + 3.0 * p.nList.toDouble / ck
-      }
-    val q = reuse.toDouble * nQueries.toDouble
-    val probed = p.nProbe.toDouble * n.toDouble / p.nList.toDouble
-    val refine = pqDerivedRefine(n, p).toDouble
-    val brute = q * n.toDouble * fb
-    val ivf = n.toDouble * assign * fb + q * (assign * fb + probed * fb)
-    val pq = n.toDouble * assign * fb + n.toDouble * fb +
-      q * (assign * fb + dim.toDouble * ks.toDouble * 8.0 +
-        probed * m.toDouble + refine * fb)
-    (brute, ivf, pq)
-  }
-
-  /** The three-way routing decision: an index tier must predict
-    * ≥ `minAdvantage`× fewer bytes than brute to leave the exact
-    * path, and IVF-PQ must beat plain IVF by the same factor to take
-    * the quantized tier (when the corpus is small enough that floats
-    * scan fine, the simpler index wins ties). Consequences the specs
-    * pin: one-shot small batches route brute at every corpus size;
-    * amortized serving routes IVF at small n or small dim (the LUT
-    * overhead prices PQ out) and IVF-PQ once the float scan dominates
-    * — at dim 64 the crossover sits near n ≈ 1-2k corpus vectors with
-    * reuse 100, and EVERY large-n amortized corpus routes PQ (the
-    * 32-64× scan-byte gap only widens). */
-  def knnAutoRoute(n: Long, nQueries: Long, reuse: Long, p: IvfParams,
-                   dim: Int, minAdvantage: Double = 1.2): Int = {
-    val (brute, ivf, pq) = knnRouteCosts(n, nQueries, reuse, p, dim)
-    val bestIndexed = math.min(ivf, pq)
-    if (bestIndexed * minAdvantage > brute) KnnRouteBrute
-    else if (pq * minAdvantage <= ivf) KnnRouteIvfPq
-    else KnnRouteIvf
+          col("e.id").as("neighbor_id"), col("e.score").as("cos")),
+      Route("knnGraph", Nil, "descent", ivf = Some(p)))
   }
 
   /** The `indexDir` memo discipline shared by [[knnAuto]] and
@@ -1823,39 +1736,52 @@ object Similarity {
 
   /** Cost-routed DEFAULT k-NN — the entry point a caller should use
     * without picking an ANN tier by hand ([[nearDupPairsAuto]]'s
-    * discipline applied to search). Routes between exact brute and
-    * the derived-IVF tier by [[knnIvfWorthIt]]; LSH is deliberately
-    * NOT in the default path: holding recall fixed its table count
-    * grows with n (measured 10.6× wall-clock for 10× data at the sf1
-    * soak — structural, the tables ARE the recall dial), while the
-    * IVF tier re-sizes as √n and measured ≤ 1.4×. [[knnLshDerived]]
-    * stays available as the certified explicit fallback (e.g. when
-    * no KMeans fit may run). `reuse` = expected query batches over
-    * the index lifetime (1 = one-shot). The result carries the
-    * routing decision + IVF params as `cos` metadata
-    * ([[knnRoutedOf]]/[[ivfParamsOf]]) so a consumer can PROVE which
-    * plan ran. */
+    * discipline applied to search). Routes between exact brute, the
+    * derived-IVF tier and IVF-PQ by [[routeLadder]] over the
+    * bytes-scanned model ([[knnFilteredRouteCosts]] with every row
+    * passing the filter, SQ8 left out). Consequences the specs pin: a
+    * ONE-SHOT small batch routes brute at every corpus size (at the
+    * recall-0.9-mandated probe fraction the probed set is already
+    * 0.6·n per query, so no build is repaid); amortized serving
+    * routes IVF at small n or small dim (the per-query PQ LUT prices
+    * the codes out) and IVF-PQ once the float scan dominates — at
+    * dim 64 the crossover sits near n ≈ 1-2k corpus vectors with
+    * reuse 100, and every large-n amortized corpus routes PQ (the
+    * 32-64× scan-byte gap only widens). LSH is deliberately NOT in
+    * the default path: holding recall fixed its table count grows
+    * with n (measured 10.6× wall-clock for 10× data at the sf1 soak —
+    * structural, the tables ARE the recall dial), while the IVF tier
+    * re-sizes as √n and measured ≤ 1.4×. [[knnLshDerived]] stays
+    * available as the certified explicit fallback (e.g. when no
+    * KMeans fit may run). `reuse` = expected query batches over the
+    * index lifetime (1 = one-shot; [[ivfSave]]/[[ivfLoad]] and
+    * `indexDir` make reuse real). The result carries its [[Route]]
+    * on `cos` ([[routeOf]], [[knnRouteOf]], [[ivfParamsOf]]) so a
+    * consumer can PROVE which plan ran. */
   def knnAuto(emb: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, k: Int, reuse: Long = 1L,
               seed: Long = 42L, indexDir: Option[String] = None): DataFrame = {
     val spark = emb.sparkSession
     val n = emb.count()
     val nQ = queries.count()
-    // empty corpus: nothing to route over — head() on the dim probe
-    // would throw; brute over an empty corpus returns the correctly-
-    // shaped empty result below (knnAutoRoute(0,…) is brute: 0 ≤ 1.2·0)
+    // empty corpus: head() on the dim probe would throw; dim 0 prices
+    // brute at 0 bytes, which the ladder never leaves, and brute over
+    // an empty corpus returns the correctly-shaped empty result
     val dim =
       if (n == 0) 0
       else emb.select(size(col(vecCol))).head().getInt(0)
     val p = ivfDerivedParams(n, knnAutoProbeFrac)
-    val route = knnAutoRoute(n, nQ, reuse, p, dim)
+    val tiers = knnFilteredRouteCosts(n, n, nQ, reuse, p, dim)
+      .filter(_._1 != "ivf_sq8")
+    val r = Route("knnAuto", tiers, routeLadder(tiers, knnRouteMinAdvantage),
+      ivf = Some(p))
     // indexDir: the ivfCachedIndex memo discipline (Scaladoc there)
-    val res = route match {
-      case KnnRouteBrute => knnBrute(emb, idCol, vecCol, queries, k)
-      case KnnRouteIvf =>
+    val res = r.chosen match {
+      case "brute" => knnBrute(emb, idCol, vecCol, queries, k)
+      case "ivf" =>
         ivfSearch(ivfCachedIndex(spark, emb, idCol, vecCol, p, seed, n,
           dim, indexDir), idCol, vecCol, queries, k, p.nProbe)
-      case KnnRouteIvfPq =>
+      case "ivf_pq" =>
         // the router's probeFrac (0.6, recall-floor-mandated) and its
         // derived refine pool — NOT knnIvfPq's standalone 0.35 sizing
         val index = ivfCachedIndex(spark, emb, idCol, vecCol, p, seed, n,
@@ -1865,29 +1791,7 @@ object Similarity {
         knnIvfPqIndexed(index, codes, cb, idCol,
           vecCol, queries, k, 8, 256, p.nProbe, pqDerivedRefine(n, p))
     }
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("ivf_nlist", p.nList.toLong)
-      .putLong("ivf_nprobe", p.nProbe.toLong)
-      .putLong("knn_route", route.toLong)
-      .putBoolean("knn_ivf_routed", route != KnnRouteBrute).build()
-    res.withColumn("cos", col("cos").as("cos", m))
-  }
-
-  /** The routing decision recorded by [[knnAuto]] (true = any indexed
-    * tier), or None for frames from other entry points. */
-  def knnRoutedOf(df: DataFrame): Option[Boolean] = {
-    val m = df.schema(df.schema.fieldIndex("cos")).metadata
-    if (m.contains("knn_ivf_routed")) Some(m.getBoolean("knn_ivf_routed"))
-    else None
-  }
-
-  /** The three-way route code recorded by [[knnAuto]]
-    * ([[KnnRouteBrute]]/[[KnnRouteIvf]]/[[KnnRouteIvfPq]]), or None
-    * for frames from other entry points. */
-  def knnRouteOf(df: DataFrame): Option[Int] = {
-    val m = df.schema(df.schema.fieldIndex("cos")).metadata
-    if (m.contains("knn_route")) Some(m.getLong("knn_route").toInt)
-    else None
+    stamped(res, r)
   }
 
   /** [[knnIvfSq8]] with corpus-derived sizing. */
@@ -1896,9 +1800,9 @@ object Similarity {
                        seed: Long = 42L): DataFrame = {
     val n = emb.count()
     val p = ivfDerivedParams(n)
-    stampIvfParams(
-      knnIvfSq8(emb, idCol, vecCol, queries, k, p.nList, p.nProbe, refine,
-        seed, knownN = Some(n)), p)
+    stamped(knnIvfSq8(emb, idCol, vecCol, queries, k, p.nList, p.nProbe,
+      refine, seed, knownN = Some(n)),
+      Route("knnIvfSq8Derived", Nil, "ivf_sq8", ivf = Some(p)))
   }
 
   /** ANN top-k via int8 scalar quantization + exact re-rank — the
@@ -2191,9 +2095,9 @@ object Similarity {
     val refine = refineOverride.getOrElse(pqDerivedRefine(n, p))
     val index = ivfBuild(emb, idCol, vecCol, p.nList, seed, knownN = Some(n))
     val cb = pqTrain(emb, idCol, vecCol, m, ks, knownN = Some(n))
-    stampIvfParams(
-      knnIvfPqIndexed(index, pqCodes(index, cb, m, ks), cb, idCol, vecCol,
-        queries, k, m, ks, p.nProbe, refine), p)
+    stamped(knnIvfPqIndexed(index, pqCodes(index, cb, m, ks), cb, idCol,
+      vecCol, queries, k, m, ks, p.nProbe, refine),
+      Route("knnIvfPq", Nil, "ivf_pq", ivf = Some(p)))
   }
 
   /** Spark `round(x, 6)` semantics on the driver (shortest-decimal

@@ -23,6 +23,9 @@ object Sinks {
                    mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).parquet(path)
 
+  private val MinRowsPerFile = 2048L
+  private val TargetFileBytes = 128L << 20
+
   /** Index/memo artifact writer with scan-ready file sizing (guide
     * §6 + §2.5): a memo written with the build plan's natural
     * partitioning lands as 1-2 unsplittable row groups, so every
@@ -33,39 +36,34 @@ object Sinks {
     * measured 4 orders of magnitude high and sized a 5 MB memo at
     * 33,009 files):
     *
-    *   files = max( min(defaultParallelism, rows / minRowsPerFile),
-    *                bytes / targetFileBytes )   (floor 1)
+    *   files = max( min(defaultParallelism, rows / MinRowsPerFile),
+    *                bytes / TargetFileBytes )   (floor 1)
     *
     * The rows term gives a hot small artifact one split per core but
-    * never slices below `minRowsPerFile` (default 2,048 ≈ 1-2 MB of
+    * never slices below `MinRowsPerFile` (2,048 ≈ 1-2 MB of
     * dim-64 vectors ≈ the point where a task's scan+compute clears
     * its scheduling overhead — measured both directions at r15: an
     * unconditional 32-file layout cost the kilobyte prebuilt-search
     * memos +0.3-0.6 s/row in listing/footer/task overhead, while a
     * 1-file layout cost the 8.5k-row planted seed corpus ~1.4 s of
     * lost scan width). The bytes term takes over at scale:
-    * terabyte artifacts get ~targetFileBytes files regardless of the
-    * core cap. Conf knobs: spark.graft.memo.minRowsPerFile,
-    * spark.graft.memo.targetFileBytes. Builds are rare and memoized,
-    * so the resize rewrite is off the query path; the row count
-    * comes from parquet footers (no data recompute). */
+    * terabyte artifacts get ~`TargetFileBytes` (128 MB) files
+    * regardless of the core cap. Builds are rare and memoized, so the
+    * resize rewrite is off the query path; the row count comes from
+    * parquet footers (no data recompute). */
   def writeScanSized(df: DataFrame, path: String,
                      mode: SaveMode = SaveMode.Overwrite): Unit = {
     df.write.mode(mode).parquet(path)
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val minRows = spark.conf.getOption("spark.graft.memo.minRowsPerFile")
-      .map(_.toLong).getOrElse(2048L)
-    val target = spark.conf.getOption("spark.graft.memo.targetFileBytes")
-      .map(_.toLong).getOrElse(128L << 20)
     val back = spark.read.parquet(path)
     val rows = back.count() // parquet footer metadata, not a data scan
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(sc.hadoopConfiguration)
     val bytes = fs.getContentSummary(hp).getLength
     val files = math.max(1L, math.max(
-      math.min(sc.defaultParallelism.toLong, rows / minRows),
-      (bytes + target - 1) / target)).toInt
+      math.min(sc.defaultParallelism.toLong, rows / MinRowsPerFile),
+      (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
     val current = back.inputFiles.length
     if (current != files) {
       // resize via tmp + checked renames (the [[compact]] swap rule:

@@ -161,23 +161,26 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val pairs = Similarity.nearDupPairsLshDerived(emb, "vec_id", "embedding",
       threshold = 0.4, dim = 8)
-    assert(Similarity.lshParamsOf(pairs)
+    assert(Similarity.routeOf(pairs).flatMap(_.lsh)
       .contains(Similarity.lshDerivedParams(40L, 0.4)))
     val knn = Similarity.knnLshDerived(emb, "vec_id", "embedding",
       emb.filter(col("vec_id") < 3), k = 2, dim = 8)
     // knn sizes by the MULTI-PROBE rule at its own HIGHER recall
     // target (0.95 — probe insurance on the query-bounded side is
     // cheap; r9 moved knn off the table-multiplying single-probe rule)
-    assert(Similarity.lshParamsOf(knn)
+    assert(Similarity.routeOf(knn).flatMap(_.lsh)
       .contains(Similarity.lshMultiProbeParams(40L, 0.5, targetRecall = 0.95)))
     // a frame from the raw (package-private) static path has no stamp
     val static = Similarity.nearDupPairsLsh(emb, "vec_id", "embedding",
       threshold = 0.4, dim = 8, numPlanes = 2, numTables = 2)
-    assert(Similarity.lshParamsOf(static).isEmpty)
+    assert(Similarity.routeOf(static).isEmpty)
   }
 
   test("cost router: refuses LSH at low tau, takes it when prediction wins") {
-    import Similarity.{lshDerivedParams, lshPredictedCandidates, lshWorthIt}
+    import Similarity.{lshDerivedParams, lshPredictedCandidates,
+      nearDupPairsCosts, routeLadder}
+    def lshWorthIt(n: Long, p: Similarity.LshParams) =
+      routeLadder(nearDupPairsCosts(n, p), 3.0) == "lsh"
     // τ=0.4: the recall cap freezes planes at 6 — candidates grow
     // quadratically, the predicted advantage never reaches 3×, and
     // the sf1 soak MEASURED derived-LSH at 1.56× brute wall-time:
@@ -202,7 +205,7 @@ class SimilaritySpec extends SparkSpec {
     // small corpus at low τ: router must pick brute and the output
     // must be the exact pair set bit-for-bit
     assert(Similarity.lshRoutedOf(auto).contains(false))
-    assert(Similarity.lshParamsOf(auto)
+    assert(Similarity.routeOf(auto).flatMap(_.lsh)
       .contains(Similarity.lshDerivedParams(60L, 0.4)))
     val exact = Similarity.nearDupPairs(emb, "vec_id", "embedding", 0.4)
     assert(auto.except(exact).isEmpty && exact.except(auto).isEmpty)
@@ -409,48 +412,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("knn cost router: one-shot small batch routes brute (exact), " +
     "amortized reuse routes the derived-IVF tier") {
-    import Similarity.{ivfDerivedParams, knnAutoProbeFrac, knnIvfWorthIt}
-    // one-shot |Q|=10 never repays an index build — at ANY corpus
-    // size (the probed set is already 0.6·n per query)
-    // amortization hurdle grows with n (the assign term is ~n^1/4
-    // dots/vector): harness-scale corpora repay at reuse=100, a 1e9
-    // corpus needs ~300 batches — the model prices the build honestly
-    for ((n, reuse) <- Seq((500L, 100L), (20000L, 100L),
-        (1000000000L, 1000L))) {
-      val p = ivfDerivedParams(n, knnAutoProbeFrac)
-      assert(!knnIvfWorthIt(n, 10L, 1L, p), s"one-shot routed IVF at n=$n")
-      assert(knnIvfWorthIt(n, 10L, reuse, p),
-        s"reuse=$reuse stayed brute at n=$n")
-    }
-    // three-way bytes-scanned law: one-shot stays brute at every
-    // (n, dim); amortized serving takes plain IVF where the float
-    // scan is cheap (small n or small dim — the per-query LUT prices
-    // PQ out) and IVF-PQ once the float scan dominates; the 100 TB
-    // regimes (n ≥ millions, dim ≥ 64) ALL land PQ
-    import Similarity.{knnAutoRoute, KnnRouteBrute, KnnRouteIvf, KnnRouteIvfPq}
-    for ((n, dim) <- Seq((500L, 64), (20000L, 64), (1000000L, 768))) {
-      val p = ivfDerivedParams(n, knnAutoProbeFrac)
-      assert(knnAutoRoute(n, 10L, 1L, p, dim) == KnnRouteBrute,
-        s"one-shot left brute at n=$n dim=$dim")
-    }
-    assert(knnAutoRoute(500L, 10L, 100L,
-      ivfDerivedParams(500L, knnAutoProbeFrac), 64) == KnnRouteIvf)
-    assert(knnAutoRoute(400L, 5L, 100L,
-      ivfDerivedParams(400L, knnAutoProbeFrac), 8) == KnnRouteIvf)
-    for (n <- Seq(2000L, 20000L, 1000000L, 1000000000L)) {
-      val p = ivfDerivedParams(n, knnAutoProbeFrac)
-      assert(knnAutoRoute(n, 10L, 100L, p, 64) == KnnRouteIvfPq,
-        s"amortized n=$n dim=64 did not route PQ")
-    }
-    // the byte model agrees with the dot model on the brute-vs-IVF
-    // boundary (every term scales by the same float-bytes factor)
-    for ((n, reuse) <- Seq((500L, 1L), (500L, 100L), (20000L, 100L))) {
-      val p = ivfDerivedParams(n, knnAutoProbeFrac)
-      val (brute, ivf, _) = Similarity.knnRouteCosts(n, 10L, reuse, p, 64)
-      assert((ivf * 1.2 <= brute) == knnIvfWorthIt(n, 10L, reuse, p))
-    }
-    // end-to-end: the routed frames carry the decision, the brute
-    // route is row-identical to knnBrute, the IVF route holds recall
+    // the decision law (one-shot brute at every corpus size, the
+    // amortization hurdle growing with n, PQ once the float scan
+    // dominates) is pinned row by row by the routeLadder decision
+    // table below; here, end to end: the routed frames carry the
+    // decision, the brute route is row-identical to knnBrute, the IVF
+    // route holds recall
     val rnd = new scala.util.Random(5L)
     val emb = (0L until 400L)
       .map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
@@ -459,8 +426,8 @@ class SimilaritySpec extends SparkSpec {
     val one = Similarity.knnAuto(emb, "vec_id", "embedding", q, 3, reuse = 1L)
     val many = Similarity.knnAuto(emb, "vec_id", "embedding", q, 3,
       reuse = 100L)
-    assert(Similarity.knnRoutedOf(one).contains(false))
-    assert(Similarity.knnRoutedOf(many).contains(true))
+    assert(Similarity.knnRouteOf(one).contains(0))
+    assert(Similarity.knnRouteOf(many).contains(1))
     val brute = Similarity.knnBrute(emb, "vec_id", "embedding", q, 3)
     assert(one.exceptAll(brute).isEmpty && brute.exceptAll(one).isEmpty)
     val common = many.select("query_id", "neighbor_id")
@@ -560,7 +527,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("knnFilteredAuto indexDir memo: second routed-PQ call fits zero " +
     "KMeans and is row-identical (r13 verdict #4)") {
-    // sized to route ivf_pq (knnFilteredRoute: broad filter + heavy
+    // sized to route ivf_pq (knnFilteredRouteCosts: broad filter + heavy
     // amortization + corpus large enough that the per-query LUT
     // amortizes against the probed scan)
     val n = 8000L
@@ -577,8 +544,8 @@ class SimilaritySpec extends SparkSpec {
       knownNQueries = Some(10L), knownDim = Some(64),
       indexDir = Some(dir))
     val first = call()
-    assert(Similarity.knnFilteredRouteOf(first).contains("ivf_pq"),
-      s"expected the PQ route, got ${Similarity.knnFilteredRouteOf(first)}")
+    val route = Similarity.routeOf(first).map(_.chosen)
+    assert(route.contains("ivf_pq"), s"expected the PQ route, got $route")
     val firstRows = first.collect().map(_.toSeq).toSet
     val before = Similarity.kmeansFits.get()
     val secondRows = call().collect().map(_.toSeq).toSet
@@ -864,11 +831,13 @@ class SimilaritySpec extends SparkSpec {
 
   test("lshMultiProbeParams: derived probe depth — r9 configs at " +
     "harness sizes, depth (not tables) absorbs corpus growth") {
-    import Similarity.{lshMultiProbeParams, lshMultiProbeTail, lshMultiProbeP1}
-    // depth-1 tail IS the named P1 form (bit-identical arithmetic) —
-    // gate hashes at every SF depend on this
+    import Similarity.{lshMultiProbeParams, lshMultiProbeTail}
+    // depth-1 tail IS the closed form c^p + p·c^(p−1)·(1−c)
+    // (bit-identical arithmetic) — gate hashes at every SF depend on this
+    val c = 2.0 / 3.0
     for (p <- 1 to 12)
-      assert(lshMultiProbeTail(2.0 / 3.0, p, 1) == lshMultiProbeP1(2.0 / 3.0, p))
+      assert(lshMultiProbeTail(c, p, 1) ==
+        math.pow(c, p) + p * math.pow(c, p - 1) * (1.0 - c))
     // the r9-committed configs at the harness corpus sizes: the depth
     // generalization must not move them (sf0.001/0.01 → 500, sf0.1 →
     // 2k, sf1 soak → 20k embeddings)
@@ -1009,11 +978,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("knnGraphAuto: brute route below the dot-model boundary, " +
     "row-identical to the exact graph; boundary replays the 1.2x hurdle") {
-    assert(Similarity.knnGraphRouteBrute(500L, 5))
-    assert(Similarity.knnGraphRouteBrute(2000L, 5))
-    assert(Similarity.knnGraphRouteBrute(3343L, 5)) // 1.2*2786 = 3343.2
-    assert(!Similarity.knnGraphRouteBrute(3344L, 5))
-    assert(!Similarity.knnGraphRouteBrute(20000L, 5))
+    // the boundary (brute through n = 3343 at k = 5, 1.2·2786 =
+    // 3343.2) is a row of the routeLadder decision table below
     val df = emb()
     val auto = Similarity.knnGraphAuto(df, "vec_id", "embedding", k = 2)
     assert(auto.select("route").distinct().collect()
@@ -1021,32 +987,6 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.knnGraphBrute(df, "vec_id", "embedding", k = 2)
     assert(auto.drop("route").except(exact).isEmpty &&
       exact.except(auto.drop("route")).isEmpty)
-  }
-
-  test("knnFilteredRoute: bytes model routes selective/one-shot to " +
-    "brute and broad+amortized to the quantized tier; hurdle " +
-    "arithmetic replays") {
-    import graft.scaleops.Similarity._
-    val p500 = ivfDerivedParams(500L, knnAutoProbeFrac)
-    // one-shot: no build amortization, brute always
-    assert(knnFilteredRoute(500L, 450L, 10L, 1L, p500, 64) == "brute")
-    // selective filter: scanning 50 floats beats routing, even amortized
-    assert(knnFilteredRoute(500L, 5L, 10L, 100L, p500, 64) == "brute")
-    // broad + amortized: the gate regime — SQ8 code scan wins (the
-    // per-query PQ LUT prices the coarser codes out at gate n)
-    assert(knnFilteredRoute(500L, 450L, 10L, 100L, p500, 64) == "ivf_sq8")
-    val p2000 = ivfDerivedParams(2000L, knnAutoProbeFrac)
-    assert(knnFilteredRoute(2000L, 1801L, 10L, 100L, p2000, 64) == "ivf_sq8")
-    // serving scale: the probed filtered set outgrows the LUT and the
-    // m-byte PQ scan takes it
-    val p100k = ivfDerivedParams(100000L, knnAutoProbeFrac)
-    assert(knnFilteredRoute(100000L, 90000L, 10L, 100L, p100k, 64)
-      == "ivf_pq")
-    // the decision is the 1.2x-hurdle comparison of the cost tuple
-    val (b, iv, s8, pq) =
-      knnFilteredRouteCosts(500L, 450L, 10L, 100L, p500, 64)
-    assert(math.min(iv, math.min(s8, pq)) * 1.2 <= b && s8 * 1.2 <= iv &&
-      !(pq * 1.2 <= s8))
   }
 
   test("ivfSearchFilteredSq8: neighbors satisfy the filter; with an " +
@@ -1103,5 +1043,265 @@ class SimilaritySpec extends SparkSpec {
     c.put(13, "idx13b")
     c.put(41, "idx41")
     assert(c.contains(13) && c.get(13).contains("idx13b"))
+  }
+
+  // ---- routing decision record ----------------------------------------
+
+  /** Tiers the five deciders that [[Similarity.routeLadder]] replaced
+    * (lshWorthIt, knnGraphRouteBrute, knnIvfWorthIt's dot-count model,
+    * knnAutoRoute, knnFilteredRoute) picked on the grid of the
+    * decision-table case, recorded from those functions, run-length
+    * coded: B brute, L lsh, D descent, I ivf, S ivf_sq8, P ivf_pq (a
+    * letter without a count is a run of one), rows in the loop order
+    * of that case. */
+  private val recordedTiers = Map(
+    "pairs" -> ("LB6L4B4L6B4L6B4L6B6L4B6L4B4L6B4L6B9LB6L4B6L4B6L3"),
+    "graph" -> ("B10DBD8"),
+    "dot" -> ("IB9IB9IB9IB9IB42I5B5I7B33I6B4I8B9IB9IB9IB9IB52I6B38IB5I6BIB9IB9IB9" +
+      "IB9IB109"),
+    "knn" -> ("P51I9PI9PI9PI9PI9PI9PI9PI9PI9PI9P51I9PI9PI9PI9PI9PI9PI9PI9PI9PI9" +
+      "P51I9PI9PI9PI9PI9PI9PI9PI9PI9PI9PB9PB9PB9PB9PB42IP5B4IP6B24P4B5IP6" +
+      "B3IP7B9PB9PB9PB9PB43P5B4IP6B27PB6P5B4IP7B9PB9PB9PB9PB44I2PIB5IP5" +
+      "B34I3P2B5IP6B9PB9PB9PB9PB42IP5B4IP6B24P4B5IP6B3IP7B9PB9PB9PB9PB42I" +
+      "P5B4IP6B24PB2PB5IP5B4IP7B9PB9PB9PB9PB43IP4B5P6B34IP4B5P7B9PB9PB9P" +
+      "B9PB42IP5B4IP6B24P4B5IP6B3IP7B9PB9PB9PB9PB42IP5B4IP6B24PB2PB5IP5B4" +
+      "IP7B9PB9PB9PB9PB43IP4B5P6B34P5B5P6"),
+    "filtered" -> ("P256SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4" +
+      "P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6" +
+      "SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6S" +
+      "P2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2" +
+      "SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P256SP2" +
+      "SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SP" +
+      "SPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSP" +
+      "S2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2" +
+      "PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2P" +
+      "S4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P256SP2SPSPS2P" +
+      "S4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4" +
+      "PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4P" +
+      "S4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4" +
+      "PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4P" +
+      "S4PS4PS4PS4PS4P6SP2SPSPS2PS4PS4PS4PS4PS4PS4PS4P5B45P5B45P5B45P5B45" +
+      "P5B163S2B48S2B3S2B3S2B3S2B3S2B3S2B23S2B2S3B2S3B2S3B2S3B2S3B3S2B118" +
+      "S2B3S2B3S2B3S2B3S2B28S2B3S2B3S2B3S2B2S3B3S2B4SB18S2B2S3B2S3B2S3B2" +
+      "S3B2S3B2S3P5B45P5B45P5B45P5B45P5B164SB48S2B3S2B3S2B3S2B3S2B3S2B23" +
+      "S2B2S3B2S3B2S3B2S3B2S3B3S2B118S2B3S2B13S2B28S2B3S2B3S2B3S2B2S3B3S2" +
+      "B23S2B2S3B2S3B2S3B2S3B2S3B3S2P5B45P5B45P5B45P5B45P5B213S2B3S2B3S2" +
+      "B3S2B3S2B4IB23S2B3S2B3S2B3S2B2IS2B3S2B3S2B168S2B3S2B3S2B3S2B3S2B3" +
+      "S2B23S2B3S2B3S2B3S2B2S3B2S3B3S2P5B45P5B45P5B45P5B45P5B163S2B48S2B3" +
+      "S2B3S2B3S2B3P2B3P2B23S2B2S3B2S3B2S3B2SP2B2P3B3P2B118S2B3S2B3S2B3S2" +
+      "B3S2B28S2B3S2B3S2B3S2B2SP2B3P2B3S2B18S2B2S3B2S3B2S3B2SP2B2P3B2SP7" +
+      "B45P5B45P5B45P5B45P5B164SB48S2B3S2B3S2B3S2B3S2B3S2B23S2B2S3B2S3B2" +
+      "S3B2SP2B2SP2B3S2B118S2B3S2B13S2B28S2B3S2B3S2B3S2B2SP2B3S2B23S2B2S3" +
+      "B2S3B2S3B2SP2B2SP2B3P7B45P5B45P5B45P5B45P5B213S2B3S2B3S2B3S2B3S2B3" +
+      "S2B23S2B3S2B3S2B3S2B2IS2B2S3B3S2B168S2B3S2B3S2B3S2B3S2B3S2B23S2B3" +
+      "S2B3S2B3S2B2S3B2SP2B3S2P5B45P5B45P5B45P5B45P5B163S2B48S2B3S2B3S2B3" +
+      "S2B3P2B3P2B23S2B2S3B2S3B2S3B2SP2B2P3B3P2B118S2B3S2B3S2B3S2B3S2B28" +
+      "S2B3S2B3S2B3S2B2SP2B3P2B3S2B18S2B2S3B2S3B2S3B2SP2B2P3B2SP7B45P5B45" +
+      "P5B45P5B45P5B164SB48S2B3S2B3S2B3S2B3SPB3S2B23S2B2S3B2S3B2S3B2SP2B2" +
+      "SP2B3SPB118S2B3S2B13S2B28S2B3S2B3S2B3S2B2SP2B3P2B23S2B2S3B2S3B2S3" +
+      "B2SP2B2P3B3P7B45P5B45P5B45P5B45P5B213S2B3S2B3S2B3S2B3S2B3S2B23S2B3" +
+      "S2B3S2B3S2B2IS2B2SP2B3S2B168S2B3S2B3S2B3S2B3S2B3S2B23S2B3S2B3S2B3" +
+      "S2B2SP2B2SP2B3S2"))
+
+  test("routeLadder decision table: the recorded tiers of the five " +
+    "deciders it replaced, on every row whose exact tier costs more " +
+    "than 0; brute on the rest") {
+    import Similarity._
+    val ns = Seq(0L, 1L, 2L, 500L, 2000L, 3343L, 3344L, 20000L, 1000000L,
+      1000000000L)
+    val nQs = Seq(0L, 5L, 10L)
+    val reuses = Seq(1L, 3L, 10L, 100L, 1000L)
+    val dims = Seq(0, 8, 64, 768)
+    def nFs(n: Long) = Seq(0L, math.min(5L, n), n / 10, (0.9 * n).toLong, n)
+    val taus = Seq(0.4, 0.5, 0.8, 0.9)
+    val advs = Seq(1.2, 1.5, 3.0)
+    def knnCosts(n: Long, nF: Long, q: Long, reuse: Long, dim: Int) =
+      knnFilteredRouteCosts(n, nF, q, reuse,
+        ivfDerivedParams(n, knnAutoProbeFrac), dim)
+    def noSq8(tiers: Seq[(String, Double)]) = tiers.filter(_._1 != "ivf_sq8")
+    val letter = Map("brute" -> 'B', "lsh" -> 'L', "descent" -> 'D',
+      "ivf" -> 'I', "ivf_sq8" -> 'S', "ivf_pq" -> 'P')
+    def unRle(s: String): String = "([A-Z])(\\d*)".r.findAllMatchIn(s)
+      .map(m => m.group(1) * (if (m.group(2).isEmpty) 1 else m.group(2).toInt))
+      .mkString
+    // Row: (label, priced tiers, hurdle, whether the exact tier costs
+    // 0 — stated from the grid values, and checked against the costs).
+    // `zeroRows` of the rows cost 0, and `zeroChanged` of those were
+    // not brute before.
+    def check(name: String, rows: Seq[(String, Seq[(String, Double)], Double, Boolean)],
+              recorded: String, zeroRows: Int, zeroChanged: Int): Unit = {
+      assert(recorded.length == rows.length, name)
+      var zero, changed = 0
+      for (((label, tiers, adv, isZero), was) <- rows.zip(recorded)) {
+        val got = letter(routeLadder(tiers, adv))
+        assert((tiers.head._2 == 0.0) == isZero, s"$name $label: zero-cost")
+        if (isZero) {
+          zero += 1
+          if (was != 'B') changed += 1
+          assert(got == 'B', s"$name $label: zero-cost row routed $got")
+        } else assert(got == was, s"$name $label: routed $got, recorded $was")
+      }
+      assert(zero == zeroRows && changed == zeroChanged,
+        s"$name: $zero zero-cost rows, $changed changed")
+    }
+    val pairs = for (a <- advs; tau <- taus; n <- ns) yield
+      (s"n=$n tau=$tau adv=$a",
+        nearDupPairsCosts(n, lshDerivedParams(n, tau)), a, n <= 1)
+    // n = 0 prices brute at -0.0 and LSH at 0, which lshWorthIt took
+    check("pairs", pairs, unRle(recordedTiers("pairs")), 24, 12)
+    // the graph decider had a fixed 1.2 hurdle; its boundary: brute
+    // through n = 3343 at k = 5 (1.2·2786 = 3343.2), descent from 3344
+    val graph = for (n <- ns; k <- Seq(2, 5)) yield
+      (s"n=$n k=$k", knnGraphRouteCosts(n, k), knnRouteMinAdvantage, n == 0)
+    check("graph", graph, unRle(recordedTiers("graph")), 2, 0)
+    // the dot-count model knew no dim: its brute-vs-IVF decision is
+    // the bytes model's at every dim > 0 (every term scales by the
+    // same float-bytes factor) — including the 1e9-corpus
+    // amortization hurdle, IVF only at reuse 1000
+    val dot = for (a <- advs; q <- nQs; r <- reuses; n <- ns; d <- dims) yield
+      (s"n=$n q=$q reuse=$r dim=$d adv=$a", knnCosts(n, n, q, r, d).take(2),
+        a, n == 0 || q == 0 || d == 0)
+    check("dot", dot,
+      unRle(recordedTiers("dot")).flatMap(_.toString * dims.size), 990, 98)
+    // dim 0 priced every tier at 0 and the old rule took the last one
+    val knn = for (d <- dims; a <- advs; q <- nQs; r <- reuses; n <- ns) yield
+      (s"n=$n q=$q reuse=$r dim=$d adv=$a", noSq8(knnCosts(n, n, q, r, d)),
+        a, n == 0 || q == 0 || d == 0)
+    check("knn", knn, unRle(recordedTiers("knn")), 990, 495)
+    val filtered = for (d <- dims; a <- advs; q <- nQs; r <- reuses; n <- ns;
+                        f <- nFs(n)) yield
+      (s"n=$n nF=$f q=$q reuse=$r dim=$d adv=$a", knnCosts(n, f, q, r, d),
+        a, f == 0 || q == 0 || d == 0)
+    check("filtered", filtered, unRle(recordedTiers("filtered")), 6030, 2475)
+    // off-grid rows earlier specs pinned: amortized small-dim serving
+    // takes float IVF; broad filters take SQ8 at n = 2000 and PQ at
+    // n = 100k, where the probed filtered set outgrows the PQ LUT
+    assert(routeLadder(noSq8(knnCosts(400L, 400L, 5L, 100L, 8)), 1.2) == "ivf")
+    assert(routeLadder(knnCosts(2000L, 1801L, 10L, 100L, 64), 1.2) == "ivf_sq8")
+    assert(routeLadder(knnCosts(100000L, 90000L, 10L, 100L, 64), 1.2) ==
+      "ivf_pq")
+  }
+
+  private val legacyRouteKeys = Seq("lsh_planes", "lsh_tables", "lsh_depth",
+    "lsh_routed", "ivf_nlist", "ivf_nprobe", "knn_route", "knn_ivf_routed",
+    "knn_filtered_route")
+
+  /** The `cos` metadata holds exactly one key, the route record. */
+  private def assertOneRouteKey(df: org.apache.spark.sql.DataFrame): Unit = {
+    val m = df.schema("cos").metadata
+    assert(m.contains("route"))
+    legacyRouteKeys.foreach(k => assert(!m.contains(k), k))
+    assert(m == new org.apache.spark.sql.types.MetadataBuilder()
+      .putMetadata("route", m.getMetadata("route")).build())
+  }
+
+  test("route record: every router stamps exactly one route key, and " +
+    "the record survives select, filter, localCheckpoint and parquet") {
+    val rnd = new scala.util.Random(5L)
+    val emb = (0L until 400L)
+      .map(i => (i, i % 2, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "label", "embedding")
+    val q = emb.filter(col("vec_id") < 5)
+    val routed = Seq(
+      Similarity.nearDupPairsAuto(emb, "vec_id", "embedding", 0.9, 8),
+      Similarity.knnAuto(emb, "vec_id", "embedding", q, 3, reuse = 100L),
+      Similarity.knnFilteredAuto(emb, "vec_id", "embedding",
+        col("label") === 0, q, 3),
+      Similarity.knnGraphAuto(emb.filter(col("vec_id") < 50), "vec_id",
+        "embedding", 2))
+    val dir = java.nio.file.Files.createTempDirectory("graft-route").toString
+    val ops = Seq("nearDupPairsAuto", "knnAuto", "knnFilteredAuto",
+      "knnGraphAuto")
+    for ((df, op) <- routed.zip(ops)) {
+      val r = Similarity.routeOf(df)
+      assert(r.map(_.op).contains(op))
+      assert(r.get.tiers.head._1 == "brute" &&
+        r.get.tiers.exists(_._1 == r.get.chosen), s"$op: $r")
+      assert(r.get.lsh.isDefined || r.get.ivf.isDefined, op)
+      assertOneRouteKey(df)
+      df.write.mode("overwrite").parquet(s"$dir/$op")
+      for (kept <- Seq(df.select("*"), df.filter(col("cos") > -2.0),
+          df.localCheckpoint(), spark.read.parquet(s"$dir/$op"))) {
+        assert(Similarity.routeOf(kept) == r, op)
+        assertOneRouteKey(kept)
+      }
+    }
+    // the kNN router took its IVF tier here, so the views read it back
+    assert(Similarity.knnRouteOf(routed(1)).contains(1))
+    assert(Similarity.ivfParamsOf(routed(1)).isDefined)
+    assert(Similarity.lshRoutedOf(routed(1)).isEmpty)
+    assert(Similarity.knnRouteOf(routed(0)).isEmpty)
+  }
+
+  /** An empty corpus with the embedding schema, and one query. */
+  private def emptyCorpus() = {
+    val e = Seq((0L, 0L, Array(1.0f, 0.0f))).toDF("vec_id", "label", "embedding")
+    (e.limit(0), e)
+  }
+
+  test("empty corpus: nearDupPairsAuto routes brute and returns no pairs") {
+    val (empty, _) = emptyCorpus()
+    val pairs = Similarity.nearDupPairsAuto(empty, "vec_id", "embedding",
+      0.5, 2)
+    assert(Similarity.lshRoutedOf(pairs).contains(false))
+    assert(pairs.columns.toSeq == Seq("a", "b", "cos") && pairs.isEmpty)
+  }
+
+  test("empty corpus: knnAuto routes brute and returns an empty, " +
+    "correctly shaped frame") {
+    val (empty, q) = emptyCorpus()
+    for (reuse <- Seq(1L, 1000L)) {
+      val res = Similarity.knnAuto(empty, "vec_id", "embedding", q, 3,
+        reuse = reuse)
+      assert(Similarity.knnRouteOf(res).contains(0))
+      assert(res.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "cos"))
+      assert(res.isEmpty)
+    }
+  }
+
+  test("empty corpus: knnFilteredAuto routes brute and returns an " +
+    "empty, correctly shaped frame") {
+    val (empty, q) = emptyCorpus()
+    val res = Similarity.knnFilteredAuto(empty, "vec_id", "embedding",
+      col("label") === 0, q, 3, reuse = 1000L)
+    assert(Similarity.routeOf(res).map(_.chosen).contains("brute"))
+    assert(res.columns.toSeq ==
+      Seq("query_id", "rank", "neighbor_id", "cos", "route"))
+    assert(res.isEmpty)
+  }
+
+  test("empty corpus: knnGraphAuto routes brute and returns an empty " +
+    "graph") {
+    val (empty, _) = emptyCorpus()
+    val res = Similarity.knnGraphAuto(empty, "vec_id", "embedding", 3)
+    assert(Similarity.routeOf(res).map(_.chosen).contains("brute"))
+    assert(res.columns.toSeq ==
+      Seq("query_id", "rank", "neighbor_id", "cos", "route"))
+    assert(res.isEmpty)
+  }
+
+  test("lint: no scaleops code outside the route record reads or " +
+    "writes column metadata") {
+    // one record, one key: ad-hoc provenance stamps beside it would
+    // split the decision across readers again
+    val dir = new java.io.File("src/main/scala/graft/scaleops")
+    assert(dir.isDirectory, s"run from the repository root: $dir")
+    val header = "// ---- routing decision record"
+    def touchesMetadata(l: String) =
+      l.contains("MetadataBuilder") || l.contains(".metadata")
+    val offenders = dir.listFiles.toSeq.filter(_.getName.endsWith(".scala"))
+      .sortBy(_.getName).flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f.toPath)
+          .toArray(Array.empty[String])
+        val start = lines.indexWhere(_.trim.startsWith(header))
+        val end = lines.indexWhere(_.trim.startsWith("// ----"), start + 1)
+        val inRecord = (i: Int) => start >= 0 && i > start && (end < 0 || i < end)
+        if (f.getName == "Similarity.scala")
+          assert(start >= 0 && lines.indices.exists(i =>
+            inRecord(i) && touchesMetadata(lines(i))), "route record not found")
+        lines.indices.filter(i => touchesMetadata(lines(i)) && !inRecord(i))
+          .map(i => s"${f.getName}:${i + 1}: ${lines(i).trim}")
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
