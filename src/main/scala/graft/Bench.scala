@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import graft.queries.{Q, Registry}
 import graft.tools.HostCanary
@@ -34,13 +35,23 @@ import graft.tools.HostCanary
   *     window, and parsed as null.
   *  5. A query that throws is listed under `failed` and kept out of
   *     `queries` and the total: a failure is never timed as a fast row.
+  *  6. `codegen_compiles` counts the Janino compiles inside each row's
+  *     warm rep. A warm row should compile nothing; a non-zero count
+  *     means its classes left the codegen cache
+  *     ([[Sessions.CodegenCacheEntries]]) between reps, and the warm
+  *     number carries compile and interpreter time.
   */
 object Bench {
 
-  /** One query's record: rep-1 and best-later-rep seconds, or the
-    * first line of the error that failed it. */
+  /** One query's record: rep-1 and best-later-rep seconds, the
+    * codegen compiles of that best rep, or the first line of the error
+    * that failed it. */
   final case class Row(name: String, cold: Double, warm: Double,
-                       failure: Option[String] = None)
+                       failure: Option[String] = None, warmCompiles: Long = 0)
+
+  /** Generated classes compiled in this JVM so far (every
+    * `CodeGenerator` cache miss; hits are not counted). */
+  def codegenCompiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Host-speed canary ([[HostCanary]]) seconds, timed before the query
     * loop and carried in the artifact, so a round-over-round delta can
@@ -101,19 +112,22 @@ object Bench {
     val row =
       if (spark.sparkContext.isStopped) Row(q.name, 0, 0, Some("SparkContext stopped"))
       else try {
-        val times = (1 to reps).map { _ =>
+        val runs = (1 to reps).map { _ =>
           Sessions.releaseResidue(spark, blocking = true)
           System.gc()
+          val c0 = codegenCompiles()
           val t0 = System.nanoTime()
           run(spark, sfDir, q)
-          (System.nanoTime() - t0) / 1e9
+          ((System.nanoTime() - t0) / 1e9, codegenCompiles() - c0)
         }
-        Row(q.name, times.head, times.tail.min)
+        val (warm, warmCompiles) = runs.tail.minBy(_._1)
+        Row(q.name, runs.head._1, warm, warmCompiles = warmCompiles)
       } catch {
         case e: Throwable =>
           Row(q.name, 0, 0, Some(e.toString.linesIterator.nextOption().getOrElse("")))
       }
-    println(row.failure.fold(f"BENCH ${q.name}%-28s cold=${row.cold}%6.2f warm=${row.warm}%6.2f")(
+    println(row.failure.fold(
+      f"BENCH ${q.name}%-28s cold=${row.cold}%6.2f warm=${row.warm}%6.2f compiles=${row.warmCompiles}")(
       m => s"BENCH ${q.name} FAILED: $m"))
     row
   }
@@ -133,6 +147,8 @@ object Bench {
     val tail = s""""skipped":${names(skipped)},"sf":"$sfDir","failed":${names(failed.map(_.name))}"""
     val full = s"""{$head,"queries":${secs(ok, _.warm)},$tail""" +
       s""","reps":$reps,"cold":${secs(ok, _.cold)}""" +
+      ok.map(r => s""""${r.name}":${r.warmCompiles}""")
+        .mkString(""","codegen_compiles":{""", ",", "}") +
       f""","canary_ref":{"cpu_sec":$RefCanaryCpuSec%.3f,"scan_sec":$RefCanaryScanSec%.3f,"vec_sec":$RefCanaryVecSec%.3f,"cpu_par_sec":$RefCanaryCpuParSec%.3f}""" +
       s""","host_index":${num(hostIndex)}""" +
       s""","vec_index":${num(canaryIndex(canary.vecSec, RefCanaryVecSec))}""" +

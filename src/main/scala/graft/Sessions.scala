@@ -4,14 +4,30 @@ import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the graft engine.
   *
-  * Local-mode defaults are tuned for the harness box (local[32],
-  * 128 GiB); on a real cluster the same settings translate directly:
-  * AQE on, shuffle partitions sized to the parallelism actually
-  * available rather than Spark's legacy 200. [[local]] is the one
-  * session builder of every main, so the correctness gate (`Verify`)
-  * certifies the configuration the bench times.
+  * [[local]] runs `local[cpus]` (`SPARK_GRAFT_CPUS`, default 32) with
+  * shuffle partitions sized to those cores rather than Spark's legacy
+  * 200, and AQE on; on a cluster the same settings carry over. It is
+  * the one session builder of every main and of the benchmark
+  * harness, so the correctness gate (`Verify`) certifies the
+  * configuration the bench times.
   */
 object Sessions {
+
+  /** Entries of the JVM-wide whole-stage codegen class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).
+    * Spark keys generated classes by source text in an LRU, and one
+    * steady-state benchmark pass re-plans more distinct shapes than
+    * 100: about 370 classes per `curation` pass and about 182 per
+    * `automl_ts` pass. At 100 every class was evicted before its next
+    * use, so each timed pass paid about 240 (`curation`) and 180
+    * (`automl_ts`) Janino compiles, each followed by interpreted
+    * execution until the JIT caught up again. 512 is 1.25x the larger
+    * working set, rounded up to a power of two; at 512 a timed pass
+    * compiles 10 (`curation`, classes whose text changes per pass)
+    * and 0 (`automl_ts`) classes. The cost is heap: cached classes
+    * and their bytecode stay live. The conf is static:
+    * `CodeGenerator` reads it once, at the first compile in the JVM. */
+  val CodegenCacheEntries = 512
 
   /** Release block-manager residue a finished query leaves behind.
     *
@@ -59,6 +75,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // TypedImperativeAggregate (KLL/CMS/HLL/reservoir/top-k) runs
       // in ObjectHashAggregateExec, whose in-memory group cap
       // defaults to 128 — the 129th distinct key per partition

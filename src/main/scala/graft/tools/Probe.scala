@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Sessions
+import graft.{Bench, Sessions}
 import graft.queries.Registry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -12,7 +12,8 @@ import scala.collection.mutable
   * `runMain graft.tools.Probe <time|profile|explain|show> <query> [sfDir] [reps|rows]`
   *
   *  - `time`: `reps` (default 2) noop-sink runs, each after a blocking
-  *    residue release and a GC, as in [[graft.Bench]];
+  *    residue release and a GC, as in [[graft.Bench]]; each rep line
+  *    carries its codegen compiles (`compiles=N`, 0 once warm);
   *  - `profile`: `time` plus every Spark job (duration, callsite) and
   *    the heaviest stages (duration, task count) per rep — the stage
   *    page in text form, since the UI is disabled in the harness;
@@ -36,9 +37,11 @@ object Probe {
     def timed(reps: Int)(report: => Unit): Unit = (1 to reps).foreach { rep =>
       Sessions.releaseResidue(spark, blocking = true)
       System.gc()
+      val c0 = Bench.codegenCompiles()
       val t0 = System.nanoTime()
       q.run(spark, dir).write.format("noop").mode("overwrite").save()
-      println(f"PROBE $name rep$rep ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"PROBE $name rep$rep ${(System.nanoTime() - t0) / 1e9}%.2f s" +
+        s" compiles=${Bench.codegenCompiles() - c0}")
       report
     }
     try mode match {

@@ -52,8 +52,16 @@ class BenchSpec extends SparkSpec {
   test("full artifact keeps its old keys and adds the warm fields") {
     assert(Set("metric", "value", "unit", "canary", "queries", "skipped", "sf",
       "failed", "reps", "cold", "canary_ref", "host_index", "vec_index",
-      "cpu_par_index", "normalization", "normalized_total").subsetOf(keys(full)))
+      "cpu_par_index", "normalization", "normalized_total",
+      "codegen_compiles").subsetOf(keys(full)))
     assert(json.readTree(full).get("cold").has("good"))
+  }
+
+  test("codegen_compiles maps each timed row to its warm rep's compiles") {
+    val j = json.readTree(full).get("codegen_compiles")
+    assert(j.isObject && j.fieldNames().asScala.toSeq == Seq("good"))
+    // rep 1 compiled the plan; the warm rep found it in the cache
+    assert(j.get("good").isIntegralNumber && j.get("good").asLong == 0L)
   }
 
   test("cpu_par_index is null for the -1.0 sentinel and the rule skips it") {

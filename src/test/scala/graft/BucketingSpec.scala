@@ -28,6 +28,7 @@ class BucketingSpec extends AnyFunSuite {
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toString)
       .getOrCreate()
   }
 

@@ -19,6 +19,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .appName("graft-ext-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toString)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
   }

@@ -207,6 +207,41 @@ class SourcesSinksSpec extends SparkSpec {
     assert(!staleTmp.exists())
   }
 
+  private def parts(dir: String): Int =
+    new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+
+  test("writeScanSized writes a 600-row input spread over 2 files once, as one file") {
+    val src = tmp() + "/scan_sized_src"
+    (1 to 600).map(i => (i.toLong, s"row$i")).toDF("k", "v")
+      .repartition(2).write.parquet(src)
+    val in = spark.read.parquet(src)
+    assert(in.inputFiles.length == 2 && in.rdd.getNumPartitions == 2)
+    val out = tmp() + "/scan_sized"
+    // a stale swap directory: only the resize rewrite clears it
+    val stale = new java.io.File(out + "_resize/stale")
+    assert(stale.mkdirs())
+    Sinks.writeScanSized(in, out)
+    assert(parts(out) == 1)
+    assert(stale.exists(), "the artifact was rewritten through _resize")
+    assert(spark.read.parquet(out).as[(Long, String)].collect().sorted.toSeq ==
+      in.as[(Long, String)].collect().sorted.toSeq)
+  }
+
+  test("writeScanSized rewrites a plan-misjudged artifact to its footer target") {
+    // 10k rows: min(4 cores, 10000 / 2048) = 4 files. A parquet scan has
+    // no row count, and its bytes alone plan one file: 4x off.
+    val src = tmp() + "/scan_sized_big_src"
+    (1 to 10000).map(i => (i.toLong, s"row$i")).toDF("k", "v")
+      .coalesce(1).write.parquet(src)
+    val out = tmp() + "/scan_sized_big"
+    Sinks.writeScanSized(spark.read.parquet(src), out)
+    assert(parts(out) == 4)
+    assert(!new java.io.File(out + "_resize").exists())
+    val back = spark.read.parquet(out)
+    assert(back.count() == 10000)
+    assert(back.agg(sum("k")).head().getLong(0) == 10000L * 10001 / 2)
+  }
+
   test("zorder key: adjacent keys stay spatially local; both dims interleave") {
     import org.apache.spark.sql.functions._
     // 64x64 grid; Morton order must map equal keys only for equal cells

@@ -10,6 +10,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toString)
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
