@@ -239,16 +239,12 @@ object AutoML {
     * vectors feeding the same CV machinery (GBT-on-windows is the
     * documented substitute for the reference's never-trained LSTM,
     * SURVEY.md §8.4). Sweeps look_back ∈ {2,3,4} (W3) and keeps the
-    * best CV metric (the first look-back on a tie). The look-backs
-    * share no data, so their cross-validations run at once, one task
-    * each on a pool of `lookBacks.size` threads under the caller's
-    * local properties ([[FoldParallelCrossValidator.runAll]]); each
-    * result is the one a sequential sweep gives. */
+    * best CV metric. */
   def trainTimeSeries(df: DataFrame, groupCol: String, orderCols: Seq[Column],
                       featureCols: Seq[String], labelCol: String,
                       lookBacks: Seq[Int] = Seq(2, 3, 4),
                       quick: Boolean = true): (Int, Trained) = {
-    def crossValidate(lb: Int): (Int, Trained) = {
+    val results = lookBacks.map { lb =>
       val windowed = graft.ts.TimeSeries.flattenedWindows(
         df, groupCol, orderCols, featureCols, labelCol, lb)
       val flatCols = (0 until lb * featureCols.size).map(i => s"f$i")
@@ -260,7 +256,6 @@ object AutoML {
       lb -> train(flat, "y", flatCols, Regression, numFolds = 3,
         quick = quick)
     }
-    FoldParallelCrossValidator.runAll(df.sparkSession, lookBacks.size)(
-      lookBacks.map(lb => () => crossValidate(lb))).minBy(_._2.cvMetric)
+    results.minBy(_._2.cvMetric)
   }
 }

@@ -30,7 +30,11 @@ object Sinks {
     * §6 + §2.5): a memo written with the build plan's natural
     * partitioning lands as 1-2 unsplittable row groups, so every
     * later scan — and the per-row compute directly above it — runs
-    * 1-2 tasks. The target file count is
+    * 1-2 tasks. File count is sized from the WRITTEN artifact's real
+    * row count and bytes (pre-write plan estimates are unusable:
+    * `optimizedPlan.stats.sizeInBytes` on a union+explode build plan
+    * measured 4 orders of magnitude high and sized a 5 MB memo at
+    * 33,009 files):
     *
     *   files = max( min(defaultParallelism, rows / MinRowsPerFile),
     *                bytes / TargetFileBytes )   (floor 1)
@@ -44,36 +48,24 @@ object Sinks {
     * 1-file layout cost the 8.5k-row planted seed corpus ~1.4 s of
     * lost scan width). The bytes term takes over at scale:
     * terabyte artifacts get ~`TargetFileBytes` (128 MB) files
-    * regardless of the core cap.
-    *
-    * The artifact is written once, repartitioned to the count the
-    * optimized plan's statistics give (its `rowCount` when known,
-    * else `sizeInBytes` alone), capped at `defaultParallelism`: a
-    * plan estimate can be far off (`sizeInBytes` on a union+explode
-    * build plan measured 4 orders of magnitude high, which uncapped
-    * would write a 5 MB memo as 33,009 files). The written artifact's
-    * real rows (parquet footers, no data recompute) and bytes then
-    * give the target, and only a count more than 2× off it is
-    * rewritten — the terabyte case past the cap, or a large artifact
-    * whose plan knew no row count. */
+    * regardless of the core cap. Builds are rare and memoized, so the
+    * resize rewrite is off the query path; the row count comes from
+    * parquet footers (no data recompute). */
   def writeScanSized(df: DataFrame, path: String,
                      mode: SaveMode = SaveMode.Overwrite): Unit = {
+    df.write.mode(mode).parquet(path)
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    def files(rows: Option[BigInt], bytes: BigInt): BigInt = {
-      val byRows = rows.fold(BigInt(0))(r => (r / MinRowsPerFile).min(sc.defaultParallelism))
-      byRows.max((bytes + TargetFileBytes - 1) / TargetFileBytes).max(1)
-    }
-    val est = df.queryExecution.optimizedPlan.stats
-    df.repartition(files(est.rowCount, est.sizeInBytes).min(sc.defaultParallelism).toInt)
-      .write.mode(mode).parquet(path)
     val back = spark.read.parquet(path)
     val rows = back.count() // parquet footer metadata, not a data scan
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(sc.hadoopConfiguration)
-    val target = files(Some(BigInt(rows)), fs.getContentSummary(hp).getLength).toInt
+    val bytes = fs.getContentSummary(hp).getLength
+    val files = math.max(1L, math.max(
+      math.min(sc.defaultParallelism.toLong, rows / MinRowsPerFile),
+      (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
     val current = back.inputFiles.length
-    if (current > 2 * target || 2 * current < target) {
+    if (current != files) {
       // resize via tmp + checked renames (the [[compact]] swap rule:
       // data always exists under SOME path; memo stamps are written
       // by callers AFTER this returns, so a crash mid-swap leaves a
@@ -81,7 +73,7 @@ object Sinks {
       val tmp = new org.apache.hadoop.fs.Path(path + "_resize")
       if (fs.exists(tmp)) require(fs.delete(tmp, true), s"cannot clear $tmp")
       val resized =
-        if (target < current) back.coalesce(target) else back.repartition(target)
+        if (files < current) back.coalesce(files) else back.repartition(files)
       resized.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       require(fs.delete(hp, true), s"cannot remove $path for resize")
       require(fs.rename(tmp, hp), s"rename $tmp -> $path failed")

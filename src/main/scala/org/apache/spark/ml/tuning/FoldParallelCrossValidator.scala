@@ -2,7 +2,7 @@ package org.apache.spark.ml.tuning
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContextExecutorService, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.ml.Model
@@ -11,7 +11,7 @@ import org.apache.spark.ml.util.Instrumentation.instrumented
 import org.apache.spark.mllib.util.MLUtils
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.{ThreadUtils, Utils}
+import org.apache.spark.util.Utils
 
 /** A `CrossValidator` that runs every fold fit at once. Spark's `fit`
   * walks the folds one after another and fans out only the param maps
@@ -33,9 +33,10 @@ import org.apache.spark.util.{ThreadUtils, Utils}
   * (each about one copy of the input) are cached at once when
   * `parallelism` reaches past one fold's combos.
   *
-  * The fits run through [[FoldParallelCrossValidator.runAll]]: each
-  * under a copy of the caller's local properties and active session.
-  * A failing fit is rethrown as is, after every started task has ended
+  * Each task runs under a copy of the caller's local properties (job
+  * group, description, job tags, custom labels) and active session,
+  * set per task rather than inherited when the pool makes a thread. A
+  * failing fit is rethrown as is, after every started task has ended
   * and every fold cache is released; tasks not yet started are
   * skipped.
   *
@@ -51,6 +52,7 @@ class FoldParallelCrossValidator(override val uid: String)
     val schema = dataset.schema
     transformSchema(schema, logging = true)
     val session = dataset.sparkSession
+    val sc = session.sparkContext
     val est = $(estimator)
     val eval = $(evaluator)
     val epm = $(estimatorParamMaps)
@@ -74,22 +76,47 @@ class FoldParallelCrossValidator(override val uid: String)
       if ($(collectSubModels)) Some(Array.fill(k)(Array.ofDim[Model[_]](epm.length)))
       else None
 
+    val failure = new AtomicReference[Throwable]
+    val props = Utils.cloneProperties(sc.getLocalProperties)
+    val ec = getExecutionContext
+    def submit(body: => Unit): Future[Unit] = Future {
+      if (failure.get == null) {
+        val (ownProps, ownSession) = (sc.getLocalProperties, SparkSession.getActiveSession)
+        sc.setLocalProperties(Utils.cloneProperties(props))
+        SparkSession.setActiveSession(session)
+        try body
+        catch { case e: Throwable => failure.compareAndSet(null, e); () }
+        finally {
+          sc.setLocalProperties(ownProps)
+          ownSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+        }
+      }
+    }(ec)
+
     def fitOn(data: Dataset[_], p: Int): Model[_] = est.fit(data, epm(p)).asInstanceOf[Model[_]]
     val foldMetrics = Array.ofDim[Double](k, epm.length)
     val refit = new AtomicReference[Model[_]]
-    val tasks: Seq[() => Unit] =
-      (if (epm.length == 1) Seq(() => refit.set(fitOn(dataset, 0))) else Nil) ++
-        (for (f <- 0 until k; p <- epm.indices) yield () => {
+    val tasks =
+      (if (epm.length == 1) Seq(submit(refit.set(fitOn(dataset, 0)))) else Nil) ++
+        (for (f <- 0 until k; p <- epm.indices) yield submit {
           try {
             val model = fitOn(folds(f)._1, p)
             subModels.foreach(_(f)(p) = model)
             foldMetrics(f)(p) = eval.evaluate(model.transform(folds(f)._2, epm(p)))
           } finally if (pending(f).decrementAndGet() == 0) release(f)
         })
-    // the finally covers folds whose tasks were skipped; unpersist is
-    // idempotent
-    try FoldParallelCrossValidator.runAll(session, $(parallelism))(tasks)
-    finally folds.indices.foreach(release)
+    try tasks.foreach(Await.ready(_, Duration.Inf))
+    catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+    finally {
+      // covers folds whose tasks were skipped; unpersist is idempotent
+      folds.indices.foreach(release)
+      ec match {
+        case pool: ExecutionContextExecutorService => pool.shutdown()
+        case _ => ()
+      }
+    }
+    val err = failure.get
+    if (err != null) throw err
 
     val metrics = foldMetrics.transpose.map(_.sum / k)
     instr.logInfo(s"Average cross-validation metrics: ${metrics.mkString(", ")}")
@@ -101,49 +128,5 @@ class FoldParallelCrossValidator(override val uid: String)
     val bestModel: Model[_] = Option(refit.get).getOrElse(fitOn(dataset, bestIndex))
     copyValues(new CrossValidatorModel(uid, bestModel, metrics)
       .setSubModels(subModels).setParent(this))
-  }
-}
-
-object FoldParallelCrossValidator {
-
-  /** Runs every body as one task on a pool of at most `parallelism`
-    * threads and returns their results in order. Each task runs under
-    * a copy of the calling thread's local properties (job group,
-    * description, job tags, custom labels) and with `session` active,
-    * set per task rather than inherited when the pool makes a thread,
-    * so every job it starts is labelled as the caller's own. Every
-    * started task is awaited; once one fails, tasks not yet started
-    * are skipped, and the first failure is rethrown as is. The pool is
-    * shut down before this returns. */
-  def runAll[T](session: SparkSession, parallelism: Int)(bodies: Seq[() => T]): Seq[T] = {
-    val sc = session.sparkContext
-    val failure = new AtomicReference[Throwable]
-    val props = Utils.cloneProperties(sc.getLocalProperties)
-    val pool = ThreadUtils.newDaemonCachedThreadPool("graft-caller-scoped",
-      math.max(1, parallelism))
-    val ec = ExecutionContext.fromExecutorService(pool)
-    try {
-      val tasks = bodies.map { body =>
-        Future {
-          if (failure.get != null) None
-          else {
-            val (ownProps, ownSession) = (sc.getLocalProperties, SparkSession.getActiveSession)
-            sc.setLocalProperties(Utils.cloneProperties(props))
-            SparkSession.setActiveSession(session)
-            try Some(body())
-            catch { case e: Throwable => failure.compareAndSet(null, e); None }
-            finally {
-              sc.setLocalProperties(ownProps)
-              ownSession.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
-            }
-          }
-        }(ec)
-      }
-      try tasks.foreach(Await.ready(_, Duration.Inf))
-      catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
-      val err = failure.get
-      if (err != null) throw err
-      tasks.map(_.value.get.get.get)
-    } finally pool.shutdown()
   }
 }

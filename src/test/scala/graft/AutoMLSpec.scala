@@ -142,20 +142,6 @@ class AutoMLSpec extends SparkSpec {
     assert(trained.model.avgMetrics.nonEmpty)
   }
 
-  test("time-series path: the concurrent look-back sweep equals a sequential one bit for bit") {
-    val df = cmapss().filter($"engine_no" <= 2).drop("sensor_16")
-    def sweep(lookBacks: Seq[Int]) = AutoML.trainTimeSeries(df, "engine_no",
-      Seq(col("time_in_cycles")), sensors.toSeq, "RUL", lookBacks = lookBacks)
-    val (lookBack, trained) = sweep(Seq(2, 3, 4))
-    // one look-back per call: each cross-validation runs alone
-    val (seqLookBack, seqTrained) = Seq(2, 3, 4).map(lb => sweep(Seq(lb)))
-      .minBy(_._2.cvMetric)
-    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToLongBits)
-    assert(lookBack == seqLookBack)
-    assert(bits(Seq(trained.cvMetric)) == bits(Seq(seqTrained.cvMetric)))
-    assert(bits(trained.model.avgMetrics.toSeq) == bits(seqTrained.model.avgMetrics.toSeq))
-  }
-
   test("classification mode trains and evaluates (fixes reference no-op)") {
     val df = cmapss().withColumn("failing",
       when($"RUL" < 20, 1.0).otherwise(0.0))
