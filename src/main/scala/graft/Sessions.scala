@@ -29,6 +29,13 @@ object Sessions {
     * `CodeGenerator` reads it once, at the first compile in the JVM. */
   val CodegenCacheEntries = 512
 
+  /** A session builder carrying the confs every graft session shares
+    * JVM-wide ([[CodegenCacheEntries]]). Static confs take effect from
+    * whichever session first uses them in a JVM, so [[local]] and the
+    * test suites' own builders all start here. */
+  def builder(): SparkSession.Builder = SparkSession.builder()
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
   /** Release block-manager residue a finished query leaves behind.
     *
     * `localCheckpoint` marks its RDD persisted but nothing ever calls
@@ -66,7 +73,7 @@ object Sessions {
 
   def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
             appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+    val spark = builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -75,7 +82,6 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // TypedImperativeAggregate (KLL/CMS/HLL/reservoir/top-k) runs
       // in ObjectHashAggregateExec, whose in-memory group cap
       // defaults to 128 — the 129th distinct key per partition

@@ -16,7 +16,7 @@ class BucketingSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    SparkSession.builder()
+    Sessions.builder()
       .master("local[4]")
       .appName("graft-bucketing-spec")
       .config("spark.sql.shuffle.partitions", "4")
@@ -28,7 +28,6 @@ class BucketingSpec extends AnyFunSuite {
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toString)
       .getOrCreate()
   }
 

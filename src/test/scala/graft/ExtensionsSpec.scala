@@ -14,12 +14,11 @@ class ExtensionsSpec extends AnyFunSuite {
     // underlying SparkContext is still shared, so this is cheap).
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
+    Sessions.builder()
       .master("local[4]")
       .appName("graft-ext-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toString)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
   }

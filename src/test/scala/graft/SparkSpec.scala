@@ -5,12 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite, small parallelism. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Sessions.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheEntries.toString)
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
