@@ -545,12 +545,14 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     // the caller's `tag` (e.g. the derived nList, so a sizing-rule
     // change invalidates too) — and rebuild on mismatch.
     val src = new java.io.File(s"$d/embeddings.parquet")
-    // "files=scan-sized-v3" (r15): layout version in the stamp — memos
-    // written by the old 1-file writer rebuild once under the
+    // "files=scan-sized-v4": layout version in the stamp — memos
+    // written by the old 1-file writer (r15: v3) rebuild once under the
     // scan-sized writer (Sinks.writeScanSized) instead of serving
-    // single-task scans forever
+    // single-task scans forever; v4 keeps a first write within 2x of
+    // its file target, so a memo on disk has the layout a fresh build
+    // gives
     val fingerprint =
-      graft.sources.Artifacts.contentFingerprint(src, s"$tag files=scan-sized-v3")
+      graft.sources.Artifacts.contentFingerprint(src, s"$tag files=scan-sized-v4")
     val stampFile = new java.io.File(s"$dir/source_fingerprint.txt")
     val fresh = new java.io.File(s"$dir/cells/_SUCCESS").exists &&
       stampFile.exists && {
@@ -607,7 +609,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     // layout version — see ivfLoadOrBuild: old 1-file memos rebuild
     // once under the scan-sized writer
     val fingerprint =
-      graft.sources.Artifacts.contentFingerprint(src, s"$tag files=scan-sized-v3")
+      graft.sources.Artifacts.contentFingerprint(src, s"$tag files=scan-sized-v4")
     val stampFile = new java.io.File(s"$dir/source_fingerprint.txt")
     val fresh = new java.io.File(s"$dir/df/_SUCCESS").exists &&
       stampFile.exists &&

@@ -31,9 +31,10 @@ object Sinks {
     * partitioning lands as 1-2 unsplittable row groups, so every
     * later scan — and the per-row compute directly above it — runs
     * 1-2 tasks. File count is sized from the WRITTEN artifact's real
-    * row count and bytes (pre-write plan estimates are unusable:
-    * `optimizedPlan.stats.sizeInBytes` on a union+explode build plan
-    * measured 4 orders of magnitude high and sized a 5 MB memo at
+    * row count and bytes (pre-write plan estimates are unusable: with
+    * CBO off `optimizedPlan.stats` carries no `rowCount` for any memo
+    * build plan, and its `sizeInBytes` read 2.4 TB for an 84 KB
+    * kNN-graph truth memo and sized a 5 MB union+explode memo at
     * 33,009 files):
     *
     *   files = max( min(defaultParallelism, rows / MinRowsPerFile),
@@ -48,9 +49,15 @@ object Sinks {
     * 1-file layout cost the 8.5k-row planted seed corpus ~1.4 s of
     * lost scan width). The bytes term takes over at scale:
     * terabyte artifacts get ~`TargetFileBytes` (128 MB) files
-    * regardless of the core cap. Builds are rare and memoized, so the
-    * resize rewrite is off the query path; the row count comes from
-    * parquet footers (no data recompute). */
+    * regardless of the core cap. The artifact is first written with
+    * the build plan's own partitioning and kept when that gave from
+    * `files` to `2 × files` files; only fewer (lost scan width) or
+    * more (small-file overhead) are rewritten to exactly `files`. So a
+    * memo whose build already lands near its target, such as an index
+    * append that unions a 1-file memo with its 1-file batch, is
+    * written once. Builds are rare and memoized, so the resize
+    * rewrite is off the query path; the row count comes from parquet
+    * footers (no data recompute). */
   def writeScanSized(df: DataFrame, path: String,
                      mode: SaveMode = SaveMode.Overwrite): Unit = {
     df.write.mode(mode).parquet(path)
@@ -65,7 +72,7 @@ object Sinks {
       math.min(sc.defaultParallelism.toLong, rows / MinRowsPerFile),
       (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
     val current = back.inputFiles.length
-    if (current != files) {
+    if (current < files || current > 2 * files) {
       // resize via tmp + checked renames (the [[compact]] swap rule:
       // data always exists under SOME path; memo stamps are written
       // by callers AFTER this returns, so a crash mid-swap leaves a

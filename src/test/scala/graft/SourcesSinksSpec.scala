@@ -210,36 +210,41 @@ class SourcesSinksSpec extends SparkSpec {
   private def parts(dir: String): Int =
     new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
 
-  test("writeScanSized writes a 600-row input spread over 2 files once, as one file") {
+  /** `rows` rows of (k, v) written as `files` parquet files, read back. */
+  private def spread(rows: Int, files: Int) = {
     val src = tmp() + "/scan_sized_src"
-    (1 to 600).map(i => (i.toLong, s"row$i")).toDF("k", "v")
-      .repartition(2).write.parquet(src)
+    (1 to rows).map(i => (i.toLong, s"row$i")).toDF("k", "v")
+      .repartition(files).write.parquet(src)
     val in = spark.read.parquet(src)
-    assert(in.inputFiles.length == 2 && in.rdd.getNumPartitions == 2)
+    assert(in.inputFiles.length == files && in.rdd.getNumPartitions == files)
+    in
+  }
+
+  test("writeScanSized keeps a first write within 2x of its target: 600 rows over 2 files") {
+    val in = spread(600, 2)
     val out = tmp() + "/scan_sized"
     // a stale swap directory: only the resize rewrite clears it
     val stale = new java.io.File(out + "_resize/stale")
     assert(stale.mkdirs())
-    Sinks.writeScanSized(in, out)
-    assert(parts(out) == 1)
+    Sinks.writeScanSized(in, out) // target 1 file; 2 are kept
+    assert(parts(out) == 2)
     assert(stale.exists(), "the artifact was rewritten through _resize")
     assert(spark.read.parquet(out).as[(Long, String)].collect().sorted.toSeq ==
       in.as[(Long, String)].collect().sorted.toSeq)
   }
 
-  test("writeScanSized rewrites a plan-misjudged artifact to its footer target") {
-    // 10k rows: min(4 cores, 10000 / 2048) = 4 files. A parquet scan has
-    // no row count, and its bytes alone plan one file: 4x off.
-    val src = tmp() + "/scan_sized_big_src"
-    (1 to 10000).map(i => (i.toLong, s"row$i")).toDF("k", "v")
-      .coalesce(1).write.parquet(src)
-    val out = tmp() + "/scan_sized_big"
-    Sinks.writeScanSized(spark.read.parquet(src), out)
-    assert(parts(out) == 4)
-    assert(!new java.io.File(out + "_resize").exists())
-    val back = spark.read.parquet(out)
-    assert(back.count() == 10000)
-    assert(back.agg(sum("k")).head().getLong(0) == 10000L * 10001 / 2)
+  test("writeScanSized rewrites too many files and too few to the footer target") {
+    // 600 rows: target 1 file, 3 written (> 2x); 10k rows:
+    // min(4 cores, 10000 / 2048) = 4 files, 1 written (< target)
+    for ((rows, files, target) <- Seq((600, 3, 1), (10000, 1, 4))) {
+      val out = tmp() + "/scan_sized"
+      Sinks.writeScanSized(spread(rows, files), out)
+      assert(parts(out) == target)
+      assert(!new java.io.File(out + "_resize").exists())
+      val back = spark.read.parquet(out)
+      assert(back.count() == rows)
+      assert(back.agg(sum("k")).head().getLong(0) == rows.toLong * (rows + 1) / 2)
+    }
   }
 
   test("zorder key: adjacent keys stay spatially local; both dims interleave") {
