@@ -29,12 +29,17 @@ object Sessions {
     * `CodeGenerator` reads it once, at the first compile in the JVM. */
   val CodegenCacheEntries = 512
 
-  /** A session builder carrying the confs every graft session shares
-    * JVM-wide ([[CodegenCacheEntries]]). Static confs take effect from
+  /** A session builder carrying the confs every graft session shares:
+    * JVM-wide [[CodegenCacheEntries]], and
+    * `spark.sql.legacy.parquet.nanosAsLong`, which the readers
+    * (`sources.Tables.load`, `streaming.EventsStream.readEvents`)
+    * expect: `events.ts` is TIMESTAMP(NANOS), which Spark 4 rejects
+    * unless it is read as a long. Static confs take effect from
     * whichever session first uses them in a JVM, so [[local]] and the
     * test suites' own builders all start here. */
   def builder(): SparkSession.Builder = SparkSession.builder()
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Release block-manager residue a finished query leaves behind.
     *

@@ -571,19 +571,9 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       // parquets, the PQ codebook) are pure functions of the cell
       // table / source corpus: a rebuilt index must invalidate them
       // with it
-      for (name <- Seq("sq8_codes", "pq_codes", "pq_cb")) {
-        val codes = new java.io.File(s"$dir/$name")
-        if (codes.exists) {
-          import scala.jdk.CollectionConverters._
-          // close the walk stream (same directory-handle leak the
-          // r14 ADVICE flagged in the stream_ets cleanup)
-          val walk = java.nio.file.Files.walk(codes.toPath)
-          val all =
-            try walk.iterator().asScala.toSeq.reverse
-            finally walk.close()
-          all.foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-      }
+      for (name <- Seq("sq8_codes", "pq_codes", "pq_cb"))
+        graft.sources.Artifacts.deleteRecursively(
+          java.nio.file.Paths.get(s"$dir/$name"))
       Similarity.ivfSave(build, dir)
       java.nio.file.Files.writeString(stampFile.toPath, fingerprint)
     }

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.EventsStream
 import QUtil._
 
@@ -22,67 +21,6 @@ import QUtil._
   * different sink mode.
   */
 object StreamingQueries {
-
-  /** Start a stream with a bounded state-partition count and await
-    * it. The state store creates `spark.sql.shuffle.partitions`
-    * RocksDB/HDFS state partitions PER stateful operator and touches
-    * every one each micro-batch — at harness scale that fixed cost
-    * dwarfs the data (32 partitions ≈ 6 s for the interval join; 8 ≈
-    * 2.5 s). Sized like any shuffle: by state volume, not a global
-    * constant — a real 100 TB stream raises it back. The session
-    * value is restored after the query so batch queries sharing the
-    * session keep their planning. */
-  private def awaitWithStatePartitions(
-      s: SparkSession, parts: Int)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val key = "spark.sql.shuffle.partitions"
-    // r16 (verdict #5): every row below emits its full result in the
-    // DATA batches — complete-mode aggregations emit everything at the
-    // last data batch; append-mode dedup/join/transformWithState rows
-    // emit on arrival (none registers an event-time timer; the one row
-    // that does, stream_ets_sessions, manages its own start and keeps
-    // no-data batches ON). The trailing no-data micro-batch only
-    // advances the watermark to evict state that is about to be thrown
-    // away anyway — but it pays a full cycle of per-batch machinery
-    // (planning, state-store open/commit per partition, offset+commit
-    // log writes). Skipping it is output-identical for these rows
-    // (oracle re-verified) and removes one of the 2-3 micro-batches
-    // each ~2 s row runs. On an unbounded production stream the
-    // trigger never ends, so the flag is irrelevant there — this is
-    // bounded-replay teardown cost only.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    val ndPrev = s.conf.getOption(ndKey)
-    s.conf.set(key, parts.toString)
-    s.conf.set(ndKey, "false")
-    try start.awaitTermination()
-    finally {
-      s.conf.set(key, prev)
-      ndPrev match {
-        case Some(v) => s.conf.set(ndKey, v)
-        case None => s.conf.unset(ndKey)
-      }
-    }
-  }
-
-  /** Keys each state partition should carry: every partition opens,
-    * commits, and snapshots a state-store instance PER micro-batch, so
-    * a partition must hold enough keys to amortize that fixed cost
-    * (tens of ms each), while ~20k row-sized entries keep its state at
-    * single-digit MB — comfortably in memory. */
-  val keysPerStatePartition: Long = 20000L
-
-  /** Derive the state-partition count from estimated key cardinality
-    * instead of a per-query constant (the constant broke the moment SF
-    * changed): `ceil(keys / keysPerStatePartition)`, clamped to
-    * [1, session shuffle parallelism]. A 10× SF bump raises the count
-    * with the keys; on a real cluster the session cap rises and the
-    * derivation follows. Pinned by StatePartitionsSpec. */
-  def statePartitionsFor(s: SparkSession, estimatedKeys: Long): Int = {
-    val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(cap,
-      math.ceil(estimatedKeys.toDouble / keysPerStatePartition).toInt))
-  }
 
   /** One-pass cardinality estimate (partial HLL aggs, no shuffle of
     * data rows) — the "engine already counts distincts cheaply" half
@@ -105,9 +43,8 @@ object StreamingQueries {
         moneySum(dec6(col("value"))).as("sum_value"))
       .select(col("window.start").cast("long").as("win_start"),
         col("event_type"), col("n_events"), col("sum_value"))
-    awaitWithStatePartitions(s, statePartitionsFor(s, keys))(
-      agg.writeStream.format("memory").queryName("st_tumbling")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start())
+    EventsStream.startMemorySink(agg, "st_tumbling", "complete",
+      stateKeys = Some(keys), availableNow = true).awaitTermination()
     s.table("st_tumbling")
   }
 
@@ -132,9 +69,8 @@ object StreamingQueries {
     // state keys = distinct event ids seen within the watermark
     val keys = approxKeys(graft.sources.Tables.load(s, d, "events"),
       col("event_id"))
-    awaitWithStatePartitions(s, statePartitionsFor(s, keys))(
-      deduped.writeStream.format("memory").queryName("st_dedup")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
+    EventsStream.startMemorySink(deduped, "st_dedup",
+      stateKeys = Some(keys), availableNow = true).awaitTermination()
     s.table("st_dedup")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -178,9 +114,8 @@ object StreamingQueries {
     // state keys = distinct content fingerprints within the watermark
     val keys = approxKeys(graft.sources.Tables.load(s, d, "documents"),
       graft.scaleops.TextAnalysis.fingerprint(col("text")))
-    awaitWithStatePartitions(s, statePartitionsFor(s, keys))(
-      deduped.writeStream.format("memory").queryName("st_neardup")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
+    EventsStream.startMemorySink(deduped, "st_neardup",
+      stateKeys = Some(keys), availableNow = true).awaitTermination()
     s.table("st_neardup")
       .agg(count(lit(1)).as("n_survivors"),
         countDistinct(col("fp")).as("n_distinct_fp"),
@@ -210,9 +145,8 @@ object StreamingQueries {
     // horizon), so the estimate is row volume, not key cardinality
     val stateRows = graft.sources.Tables.load(s, d, "events")
       .filter(col("event_type").isin("purchase", "click")).count()
-    awaitWithStatePartitions(s, statePartitionsFor(s, stateRows))(
-      joined.writeStream.format("memory").queryName("st_ssjoin")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start())
+    EventsStream.startMemorySink(joined, "st_ssjoin",
+      stateKeys = Some(stateRows), availableNow = true).awaitTermination()
     s.table("st_ssjoin")
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("p_id")).as("n_purchases_matched"),
@@ -251,9 +185,8 @@ object StreamingQueries {
     // state keys = event types (each carrying one O(k·log n) sketch)
     val keys = approxKeys(graft.sources.Tables.load(s, d, "events"),
       col("event_type"))
-    awaitWithStatePartitions(s, statePartitionsFor(s, keys))(
-      agg.writeStream.format("memory").queryName("st_kll")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start())
+    EventsStream.startMemorySink(agg, "st_kll", "complete",
+      stateKeys = Some(keys), availableNow = true).awaitTermination()
     val batch = graft.sources.Tables.load(s, d, "events")
       .filter(col("value").isNotNull)
     batch.join(broadcast(s.table("st_kll")), "event_type")
@@ -284,26 +217,14 @@ object StreamingQueries {
     * bounded-replay artifact. StreamingSpec separately pins tws ≡
     * flatMapGroupsWithState row-for-row. */
   def streamTwsSessions(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ev = EventsStream.readEvents(s, s"$d/events.parquet")
-      // state keys = users (one ValueState entry each)
-      val keys = approxKeys(graft.sources.Tables.load(s, d, "events"),
-        col("user_id"))
-      val sessions = EventsStream.twsSessions(ev)
-        .toDF("user_id", "sess_events")
-      awaitWithStatePartitions(s, statePartitionsFor(s, keys))(
-        sessions.writeStream.format("memory").queryName("st_tws")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start())
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
+    val ev = EventsStream.readEvents(s, s"$d/events.parquet")
+    // state keys = users (one ValueState entry each)
+    val keys = approxKeys(graft.sources.Tables.load(s, d, "events"),
+      col("user_id"))
+    val sessions = EventsStream.twsSessions(ev)
+      .toDF("user_id", "sess_events")
+    EventsStream.startMemorySink(sessions, "st_tws", stateKeys = Some(keys),
+      rocksDb = true, availableNow = true).awaitTermination()
     s.table("st_tws")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_closed_sessions"),
@@ -322,10 +243,6 @@ object StreamingQueries {
     * oracle is the complete sessionization with NO last-session
     * exclusion. */
   def streamEtsSessions(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val sentinelUser = 9999999999L
     // staged temp dirs (one holds a FULL copy of events.parquet) are
     // deleted on exit — a warm bench reps this row several times per
@@ -355,7 +272,6 @@ object StreamingQueries {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$d/events.parquet"),
         dir.resolve("events.parquet"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val sch = s.read.parquet(s"$d/events.parquet").schema
       val sentinelTsUs = maxUs + 1800000000L + 7200000000L + 3600000000L
       val vals: Array[Any] = sch.fields.map { f =>
@@ -395,50 +311,33 @@ object StreamingQueries {
       val dst = new java.io.File(dir.toFile, "zz_flush.parquet")
       java.nio.file.Files.move(part.toPath, dst.toPath)
       val ev = EventsStream.readEvents(s, dir.toString)
-      val parts = statePartitionsFor(s, keys)
-      val pKey = "spark.sql.shuffle.partitions"
-      val pPrev = s.conf.get(pKey)
-      s.conf.set(pKey, parts.toString)
-      try {
-        val q = EventsStream.twsSessionsEventTime(ev, delay = "2 hours")
-          .toDF("user_id", "sess_events")
-          .writeStream.format("memory").queryName("st_ets")
-          .outputMode("append").start()
-        // event-time timers fire in the no-data batch AFTER the
-        // watermark advances — processAllAvailable can return before
-        // it, so poll the sink against the known batch total. 50 ms
-        // grain (r15): the sink count is a driver-local memory-table
-        // scan, so a finer poll costs ~nothing and shaves the
-        // up-to-250 ms post-completion wait the old grain added.
-        val deadline = System.currentTimeMillis() + 120000L
-        var drained = -1L
-        while (drained < expectTotal &&
-          System.currentTimeMillis() < deadline) {
-          Thread.sleep(50L)
-          drained = s.table("st_ets")
-            .filter(col("user_id") =!= sentinelUser).count()
-        }
-        q.stop()
-      } finally s.conf.set(pKey, pPrev)
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
+      val q = EventsStream.startMemorySink(
+        EventsStream.twsSessionsEventTime(ev, delay = "2 hours")
+          .toDF("user_id", "sess_events"),
+        "st_ets", stateKeys = Some(keys), rocksDb = true)
+      // event-time timers fire in the no-data batch AFTER the
+      // watermark advances — processAllAvailable can return before
+      // it, so poll the sink against the known batch total. 50 ms
+      // grain (r15): the sink count is a driver-local memory-table
+      // scan, so a finer poll costs ~nothing and shaves the
+      // up-to-250 ms post-completion wait the old grain added.
+      val deadline = System.currentTimeMillis() + 120000L
+      var drained = -1L
+      while (drained < expectTotal &&
+        System.currentTimeMillis() < deadline) {
+        Thread.sleep(50L)
+        drained = s.table("st_ets")
+          .filter(col("user_id") =!= sentinelUser).count()
       }
+      q.stop()
+    } finally {
       // the memory-sink result is fully materialized in st_ets, so
       // the staged inputs can go now; best-effort — a deletion
       // failure must not mask the row's result (or a primary
-      // exception from the try block), and the walk stream must be
-      // closed or each gate run leaks a directory handle
-      for (p <- staged if java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        try {
-          val walk = java.nio.file.Files.walk(p)
-          val all =
-            try walk.iterator().asScala.toSeq.reverse
-            finally walk.close()
-          all.foreach(x => java.nio.file.Files.deleteIfExists(x))
-        } catch {
+      // exception from the try block)
+      for (p <- staged) {
+        try graft.sources.Artifacts.deleteRecursively(p)
+        catch {
           case e: java.io.IOException =>
             System.err.println(s"[stream_ets] staged-input cleanup failed for $p: $e")
         }
@@ -452,7 +351,10 @@ object StreamingQueries {
         max(col("sess_events")).as("max_session_events"))
   }
 
-  val streamEtsSessionsOracle: String =
+  /** The gap-sessionization CTEs both session oracles start from:
+    * `g` (each event's previous ts per user), `m` (new-session flag at
+    * a gap of 30 min or more), `sess` (running session id). */
+  private val sessionCtes: String =
     """WITH g AS (
       |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
       |    LAG(epoch_us(CAST(ts AS TIMESTAMP))) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_us
@@ -465,7 +367,10 @@ object StreamingQueries {
       |  SELECT user_id,
       |    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
       |  FROM m),
-      |per_sess AS (
+      |""".stripMargin
+
+  val streamEtsSessionsOracle: String = sessionCtes +
+    """per_sess AS (
       |  SELECT user_id, sess_id, COUNT(*) AS sess_events
       |  FROM sess GROUP BY user_id, sess_id)
       |SELECT user_id, COUNT(*) AS n_sessions,
@@ -473,20 +378,8 @@ object StreamingQueries {
       |  MAX(sess_events) AS max_session_events
       |FROM per_sess GROUP BY user_id""".stripMargin
 
-  val streamTwsSessionsOracle: String =
-    """WITH g AS (
-      |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-      |    LAG(epoch_us(CAST(ts AS TIMESTAMP))) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_us
-      |  FROM events),
-      |m AS (
-      |  SELECT user_id, event_id, us,
-      |    CASE WHEN prev_us IS NULL OR us - prev_us >= 1800000000 THEN 1 ELSE 0 END AS new_sess
-      |  FROM g),
-      |sess AS (
-      |  SELECT user_id,
-      |    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sess_id
-      |  FROM m),
-      |per_sess AS (
+  val streamTwsSessionsOracle: String = sessionCtes +
+    """per_sess AS (
       |  SELECT user_id, sess_id, COUNT(*) AS sess_events,
       |    MAX(sess_id) OVER (PARTITION BY user_id) AS last_sess
       |  FROM sess GROUP BY user_id, sess_id)
@@ -503,30 +396,18 @@ object StreamingQueries {
     * "streaming state fold ≡ batch fold ≡ DuckDB fold", one
     * trajectory pinned across all three execution models. */
   def streamCusum(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ev = EventsStream.readEvents(s, s"$d/events.parquet")
-        .filter(col("user_id") < 3 && col("value").isNotNull)
-      val batch = graft.sources.Tables.load(s, d, "events")
-        .filter(col("user_id") < 3 && col("value").isNotNull)
-      // identical decimal-exact mean as the batch cusum operator
-      val mu = batch.groupBy("user_id").agg(
-        (sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double") / count(lit(1))).as("mu"))
-      val out = EventsStream.cusumStream(ev, mu, slack = 5.0, threshold = 50.0)
-        .toDF("user_id", "event_id", "x", "cusum_pos", "cusum_neg", "alarm")
-      awaitWithStatePartitions(s, statePartitionsFor(s, 3L))(
-        out.writeStream.format("memory").queryName("st_cusum")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start())
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
+    val ev = EventsStream.readEvents(s, s"$d/events.parquet")
+      .filter(col("user_id") < 3 && col("value").isNotNull)
+    val batch = graft.sources.Tables.load(s, d, "events")
+      .filter(col("user_id") < 3 && col("value").isNotNull)
+    // identical decimal-exact mean as the batch cusum operator
+    val mu = batch.groupBy("user_id").agg(
+      (sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
+        .cast("double") / count(lit(1))).as("mu"))
+    val out = EventsStream.cusumStream(ev, mu, slack = 5.0, threshold = 50.0)
+      .toDF("user_id", "event_id", "x", "cusum_pos", "cusum_neg", "alarm")
+    EventsStream.startMemorySink(out, "st_cusum", stateKeys = Some(3L),
+      rocksDb = true, availableNow = true).awaitTermination()
     s.table("st_cusum")
   }
 
@@ -560,9 +441,8 @@ object StreamingQueries {
         unix_micros(col("session_window.start")).as("sess_start"),
         unix_micros(col("session_window.end")).as("sess_end"),
         col("n_events"), col("sum_value"))
-    awaitWithStatePartitions(s, statePartitionsFor(s, keys))(
-      agg.writeStream.format("memory").queryName("st_session_win")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start())
+    EventsStream.startMemorySink(agg, "st_session_win", "complete",
+      stateKeys = Some(keys), availableNow = true).awaitTermination()
     s.table("st_session_win")
   }
 

@@ -1668,16 +1668,9 @@ object Similarity {
           java.nio.file.Files.readString(stamp.toPath) == tag)
           ivfLoad(spark, dir)
         else {
-          for (name <- Seq("pq_cb", "pq_codes", "sq8_codes")) {
-            val f = new java.io.File(s"$dir/$name")
-            if (f.exists) {
-              def rm(x: java.io.File): Unit = {
-                if (x.isDirectory) x.listFiles.foreach(rm)
-                x.delete(); ()
-              }
-              rm(f)
-            }
-          }
+          for (name <- Seq("pq_cb", "pq_codes", "sq8_codes"))
+            graft.sources.Artifacts.deleteRecursively(
+              java.nio.file.Paths.get(s"$dir/$name"))
           val idx = ivfBuild(emb, idCol, vecCol, p.nList, seed,
             knownN = Some(n))
           new java.io.File(dir).mkdirs()

@@ -36,6 +36,20 @@ object Artifacts {
       .getOrElse(Paths.get(sys.props("user.dir")).toAbsolutePath)
   }
 
+  /** Delete `root` and everything under it; a missing `root` is a
+    * no-op. Children go before their directory, the walk stream is
+    * closed, and a file that cannot be deleted throws. */
+  def deleteRecursively(root: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      val all =
+        try walk.iterator().asScala.toSeq.reverse
+        finally walk.close()
+      all.foreach(Files.deleteIfExists)
+    }
+  }
+
   /** Absolute path of a named tracked-artifact directory. */
   def dir(name: String): String =
     repoRoot.resolve("artifacts").resolve(name).toString

@@ -25,10 +25,11 @@ object Tables {
     * with integer division (`DIV` — ns-since-epoch ~1.7e18 overflows
     * a double, so `/ 1000.0` would silently lose precision). The
     * result is exactly DuckDB's `CAST(ts AS TIMESTAMP)` truncation,
-    * which every oracle mirrors.
+    * which every oracle mirrors. Reading nanos as a long needs
+    * `spark.sql.legacy.parquet.nanosAsLong`, so readers expect a
+    * session built from `graft.Sessions.builder()`, which sets it.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) => // TIMESTAMP(NANOS) read as ns-since-epoch

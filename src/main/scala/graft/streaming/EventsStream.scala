@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming variants of the events-table aggregations
   * (stretch beyond the reference, which has no streaming —
@@ -19,12 +19,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object EventsStream {
 
   /** Streaming scan of an events parquet path. The ns-timestamp
-    * rebuild mirrors `Tables.load`. The streaming file source only
+    * rebuild mirrors `Tables.load`, and like it expects a session
+    * built from `graft.Sessions.builder()`, which reads
+    * TIMESTAMP(NANOS) as a long. The streaming file source only
     * accepts directories — a single-file path routes through its
     * parent with a `pathGlobFilter`, so the same table location works
     * for both the batch and streaming halves of a pipeline. */
   def readEvents(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(path).schema
     // resolve through the Hadoop FileSystem API so the single-file →
     // parent + pathGlobFilter rewrite applies on ANY filesystem the
@@ -111,8 +112,8 @@ object EventsStream {
     * TTL, timers, and schema evolution over `flatMapGroupsWithState`,
     * and the one new pipelines should target. Requires the RocksDB
     * state store provider (the operator rejects the default HDFS-
-    * backed store); callers set
-    * `spark.sql.streaming.stateStore.providerClass` accordingly.
+    * backed store); start the stream with [[startMemorySink]]'s
+    * `rocksDb = true`.
     * StreamingSpec pins its output equal to the fMGWS twin. */
   class SessionProcessor(gapUs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -578,11 +579,84 @@ object EventsStream {
         col("click_value"))
   }
 
+  /** Keys each state partition should carry: every partition opens,
+    * commits, and snapshots a state-store instance PER micro-batch, so
+    * a partition must hold enough keys to amortize that fixed cost
+    * (tens of ms each), while ~20k row-sized entries keep its state at
+    * single-digit MB — comfortably in memory. */
+  val keysPerStatePartition: Long = 20000L
+
+  /** Derive the state-partition count from estimated key cardinality
+    * instead of a per-query constant (the constant broke the moment SF
+    * changed): `ceil(keys / keysPerStatePartition)`, clamped to
+    * [1, session shuffle parallelism]. A 10× SF bump raises the count
+    * with the keys; on a real cluster the session cap rises and the
+    * derivation follows. Pinned by HardeningSpec. */
+  def statePartitionsFor(s: SparkSession, estimatedKeys: Long): Int = {
+    val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
+    math.max(1, math.min(cap,
+      math.ceil(estimatedKeys.toDouble / keysPerStatePartition).toInt))
+  }
+
   /** Drive a streaming frame to a named in-memory table (append mode
     * needs the watermark to close windows; complete mode suits tests
-    * reading final counts). */
+    * reading final counts). The one place a stream is started with
+    * non-default SQL confs; the caller awaits the returned query.
+    *
+    *  - `stateKeys`: estimated state keys, which size
+    *    `spark.sql.shuffle.partitions` through [[statePartitionsFor]].
+    *    The state store creates that many state partitions PER stateful
+    *    operator and touches every one each micro-batch — at harness
+    *    scale that fixed cost dwarfs the data (32 partitions ≈ 6 s for
+    *    the interval join; 8 ≈ 2.5 s). Sized like any shuffle: by state
+    *    volume, not a global constant — a real 100 TB stream raises it
+    *    back.
+    *  - `rocksDb`: the RocksDB state store, which `transformWithState`
+    *    requires.
+    *  - `availableNow`: a bounded replay (`Trigger.AvailableNow`) with
+    *    trailing no-data micro-batches off. Every bounded-replay row
+    *    emits its full result in the DATA batches — complete-mode
+    *    aggregations emit everything at the last data batch; append-mode
+    *    dedup/join/transformWithState rows emit on arrival (none
+    *    registers an event-time timer; the one row that does,
+    *    stream_ets_sessions, keeps no-data batches ON). The trailing
+    *    no-data micro-batch only advances the watermark to evict state
+    *    that is about to be thrown away anyway — but it pays a full
+    *    cycle of per-batch machinery (planning, state-store open/commit
+    *    per partition, offset+commit log writes). Skipping it is
+    *    output-identical for these rows (oracle re-verified) and removes
+    *    one of the 2-3 micro-batches each ~2 s row runs. On an unbounded
+    *    production stream the trigger never ends, so the flag is
+    *    irrelevant there — this is bounded-replay teardown cost only.
+    *
+    * The confs are set on the caller's session only across `start()`
+    * and restored in a `finally`: `StreamExecution`'s constructor
+    * clones the session for the stream, so a started query never reads
+    * the caller's conf again. The stream stays in the caller's session
+    * (no `newSession()`): the session's streaming listeners see its
+    * progress, and the sink table is visible to the caller's queries. */
   def startMemorySink(df: DataFrame, name: String,
-                      outputMode: String = "append"): StreamingQuery =
-    df.writeStream.format("memory").queryName(name)
-      .outputMode(outputMode).start()
+                      outputMode: String = "append",
+                      stateKeys: Option[Long] = None,
+                      rocksDb: Boolean = false,
+                      availableNow: Boolean = false): StreamingQuery = {
+    val spark = df.sparkSession
+    val confs =
+      stateKeys.map(k => "spark.sql.shuffle.partitions" ->
+        statePartitionsFor(spark, k).toString).toSeq ++
+        Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") ++
+        Option.when(availableNow)(
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val w = df.writeStream.format("memory").queryName(name)
+        .outputMode(outputMode)
+      (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.KllSketch
-import graft.queries.StreamingQueries
 import graft.scaleops.{Similarity, TrainingData}
+import graft.streaming.EventsStream
 
 /** Pins the r5 hardening fixes (ADVICE r4 + VERDICT r4 #6): KLL
   * sketch input validation, PII pattern boundaries, SQ8 zero-norm
-  * guard, mixture-sampling sign totality, and the state-partition
-  * derivation rule. */
+  * guard, mixture-sampling sign totality, the state-partition
+  * derivation rule, and the one place a session conf is set. */
 class HardeningSpec extends SparkSpec {
   import spark.implicits._
 
@@ -119,15 +119,45 @@ class HardeningSpec extends SparkSpec {
 
   test("statePartitionsFor scales with keys and clamps to session parallelism") {
     // SparkSpec session runs spark.sql.shuffle.partitions = 4
-    assert(StreamingQueries.statePartitionsFor(spark, 0L) == 1)
-    assert(StreamingQueries.statePartitionsFor(spark, 150L) == 1)
-    assert(StreamingQueries.statePartitionsFor(spark, 20001L) == 2)
-    assert(StreamingQueries.statePartitionsFor(spark, 60000L) == 3)
-    assert(StreamingQueries.statePartitionsFor(spark, 10000000L) == 4,
+    assert(EventsStream.statePartitionsFor(spark, 0L) == 1)
+    assert(EventsStream.statePartitionsFor(spark, 150L) == 1)
+    assert(EventsStream.statePartitionsFor(spark, 20001L) == 2)
+    assert(EventsStream.statePartitionsFor(spark, 60000L) == 3)
+    assert(EventsStream.statePartitionsFor(spark, 10000000L) == 4,
       "must clamp to the session's shuffle parallelism")
     val seq = Seq(1L, 100L, 30000L, 50000L, 70000L, 1000000L)
-      .map(StreamingQueries.statePartitionsFor(spark, _))
+      .map(EventsStream.statePartitionsFor(spark, _))
     assert(seq == seq.sorted, "derivation must be monotonic in keys")
+  }
+
+  test("lint: no graft code outside startMemorySink sets or unsets a " +
+    "session conf") {
+    // a stream's confs are set across its start() only, in one place;
+    // query code that mutates the shared session leaks into every
+    // later query of that session
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    def mutates(l: String) = l.contains("conf.set(") || l.contains("conf.unset(")
+    val offenders = scalaFiles(root).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String])
+      val start =
+        if (f.getName != "EventsStream.scala") -1
+        else lines.indexWhere(_.contains("def startMemorySink("))
+      val end = if (start < 0) -1 else lines.indexWhere(_ == "  }", start)
+      val inStarter = (i: Int) => start >= 0 && i > start && i < end
+      if (f.getName == "EventsStream.scala")
+        assert(start >= 0 && lines.indices.exists(i =>
+          inStarter(i) && mutates(lines(i))), "startMemorySink not found")
+      lines.indices.filter(i => mutates(lines(i)) && !inStarter(i))
+        .map(i => s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${lines(i).trim}")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("winsorize: ~5% clipped per tail, mean stays inside the band") {

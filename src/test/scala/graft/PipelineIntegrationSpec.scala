@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scaleops.TextAnalysis
-import graft.sources.Sinks
+import graft.sources.{Artifacts, Sinks}
 import graft.stats.Expectations
 
 /** End-to-end training-data pipeline: the round-3 operators composed
@@ -53,13 +53,6 @@ class PipelineIntegrationSpec extends SparkSpec {
       assert(plan.contains("PushedFilters") && plan.contains("n_chars"))
       assert(filtered.count() ==
         kept.filter(col("n_chars") > 500).count())
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(root)
-      val all =
-        try walk.iterator().asScala.toSeq.reverse
-        finally walk.close()
-      all.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    } finally Artifacts.deleteRecursively(root)
   }
 }

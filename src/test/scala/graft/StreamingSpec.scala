@@ -171,24 +171,18 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transformWithState sessions equal the flatMapGroupsWithState twin") {
-    // the modern API needs the RocksDB state store; per-query conf,
-    // set before start and restored after
+    // the modern API needs the RocksDB state store: startMemorySink
+    // sets it only across start() and restores the caller's value, and
+    // the query still runs on it (the stream cloned the session)
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = EventsStream.startMemorySink(
-        EventsStream.twsSessions(EventsStream.readEvents(spark, streamDir))
-          .toDF("user_id", "sess_events"),
-        "tws_out", "append")
-      q.processAllAvailable(); q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    assert(!prev.exists(_.contains("RocksDB")))
+    val q = EventsStream.startMemorySink(
+      EventsStream.twsSessions(EventsStream.readEvents(spark, streamDir))
+        .toDF("user_id", "sess_events"),
+      "tws_out", rocksDb = true)
+    assert(spark.conf.getOption(key) == prev)
+    q.processAllAvailable(); q.stop()
     val q2 = EventsStream.startMemorySink(
       EventsStream.statefulSessions(EventsStream.readEvents(spark, streamDir))
         .toDF("user_id", "sess_events"),
@@ -204,235 +198,195 @@ class StreamingSpec extends SparkSpec {
   test("timer-evicting tws sessions DRAIN the state: closed + evicted " +
     "equals the batch gap-sessionization total, events conserved") {
     import org.apache.spark.sql.functions._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // NOTE: with TimeMode.ProcessingTime the engine keeps running
-      // micro-batches while timers are pending, so
-      // processAllAvailable() never latches — poll the sink against
-      // a deadline instead (the timers fire on their own)
-      // evictMs must comfortably exceed any plausible inter-micro-batch
-      // stall on a loaded CI box: a timer that fires while a key still
-      // has events in flight splits that session and the strict
-      // equality below fails flakily (r12 ADVICE). 15 s >> the
-      // 250 ms trigger; the poll loop below exits as soon as the last
-      // timers fire, so the test only pays ~evictMs once.
-      val q = EventsStream.twsSessionsEvicting(
+    // NOTE: with TimeMode.ProcessingTime the engine keeps running
+    // micro-batches while timers are pending, so
+    // processAllAvailable() never latches — poll the sink against
+    // a deadline instead (the timers fire on their own)
+    // evictMs must comfortably exceed any plausible inter-micro-batch
+    // stall on a loaded CI box: a timer that fires while a key still
+    // has events in flight splits that session and the strict
+    // equality below fails flakily (r12 ADVICE). 15 s >> one
+    // micro-batch; the poll loop below exits as soon as the last
+    // timers fire, so the test only pays ~evictMs once.
+    val q = EventsStream.startMemorySink(
+      EventsStream.twsSessionsEvicting(
         EventsStream.readEvents(spark, streamDir), evictMs = 15000L)
-        .toDF("user_id", "sess_events")
-        .writeStream.format("memory").queryName("tws_evict_out")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("250 milliseconds"))
-        .start()
-      val sess = Events.sessionize(spark, sf)
-      val batchTotal = sess.agg(sum("n_sessions")).head().getLong(0)
-      val deadline = System.currentTimeMillis() + 120000L
-      var drained = spark.table("tws_evict_out").count()
-      while (drained < batchTotal && System.currentTimeMillis() < deadline) {
-        Thread.sleep(500L)
-        drained = spark.table("tws_evict_out").count()
-      }
-      q.stop()
-      // drained: the gap-closed sessions arrived with the data; every
-      // user's final open session was EMITTED by its eviction timer
-      // and the state cleared — closed + evicted equals the batch
-      // total exactly, nothing dangles (the 100 TB TTL claim) and
-      // nothing double-fires (strict equality, not >=)
-      val out = spark.table("tws_evict_out")
-      assert(out.count() == batchTotal,
-        s"drained=${out.count()}, want $batchTotal")
-      // event conservation: every event landed in exactly one session
-      val nEvents = graft.sources.Tables.load(spark, sf, "events").count()
-      assert(out.agg(sum("sess_events")).head().getLong(0) == nEvents)
-      // per-user session counts equal the batch sessionization's
-      val streamedPerUser = out.groupBy("user_id")
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val batchPerUser = sess.select("user_id", "n_sessions").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(streamedPerUser == batchPerUser)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+        .toDF("user_id", "sess_events"),
+      "tws_evict_out", rocksDb = true)
+    val sess = Events.sessionize(spark, sf)
+    val batchTotal = sess.agg(sum("n_sessions")).head().getLong(0)
+    val deadline = System.currentTimeMillis() + 120000L
+    var drained = spark.table("tws_evict_out").count()
+    while (drained < batchTotal && System.currentTimeMillis() < deadline) {
+      Thread.sleep(500L)
+      drained = spark.table("tws_evict_out").count()
     }
+    q.stop()
+    // drained: the gap-closed sessions arrived with the data; every
+    // user's final open session was EMITTED by its eviction timer
+    // and the state cleared — closed + evicted equals the batch
+    // total exactly, nothing dangles (the 100 TB TTL claim) and
+    // nothing double-fires (strict equality, not >=)
+    val out = spark.table("tws_evict_out")
+    assert(out.count() == batchTotal,
+      s"drained=${out.count()}, want $batchTotal")
+    // event conservation: every event landed in exactly one session
+    val nEvents = graft.sources.Tables.load(spark, sf, "events").count()
+    assert(out.agg(sum("sess_events")).head().getLong(0) == nEvents)
+    // per-user session counts equal the batch sessionization's
+    val streamedPerUser = out.groupBy("user_id")
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val batchPerUser = sess.select("user_id", "n_sessions").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(streamedPerUser == batchPerUser)
   }
 
   test("EVENT-TIME session timers: drained output equals the batch " +
     "gap-sessionization EXACTLY on an out-of-order multi-file fixture " +
     "(replayable semantics — no wall-clock in the close decision)") {
     import org.apache.spark.sql.functions._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // fixture: time-chunk the events into 3 files, then DEFER the
-      // last hour of each chunk into the following file — real
-      // cross-batch disorder, bounded by 1h < the 2h watermark delay
-      // so nothing is late-dropped; a 4th sentinel file pushes the
-      // watermark past every (max + gap) expiry, standing in for the
-      // production stream that keeps flowing
-      val ev = graft.sources.Tables.load(spark, sf, "events")
-        .select(col("user_id").cast("long").as("user_id"), col("ts"))
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1)))
-        .sortBy(_._2.getTime)
-      val tsMs = ev.map(_._2.getTime)
-      val (minMs, maxMs) = (tsMs.min, tsMs.max)
-      val cut1 = minMs + (maxMs - minMs) / 3
-      val cut2 = minMs + 2 * (maxMs - minMs) / 3
-      val hourMs = 3600000L
-      def fileOf(ms: Long): Int = {
-        val base = if (ms < cut1) 0 else if (ms < cut2) 1 else 2
-        // within an hour below a cut -> deferred to the next file
-        if (base == 0 && ms >= cut1 - hourMs) 1
-        else if (base == 1 && ms >= cut2 - hourMs) 2
-        else base
-      }
-      val sentinelUser = 10000000L
-      val gapMs = 1800000L
-      val sentinelMs = maxMs + gapMs + 2 * hourMs + hourMs
-      val dir = java.nio.file.Files.createTempDirectory("graft-ets")
-      import spark.implicits._
-      for (f <- 0 to 3) {
-        val rows =
-          if (f == 3) Seq((sentinelUser, new java.sql.Timestamp(sentinelMs)))
-          else ev.filter(r => fileOf(r._2.getTime) == f).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft-etsw$f")
-        rows.toDF("user_id", "ts").coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(dir.toFile, f"f$f%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(System.currentTimeMillis() - (10 - f) * 10000L)
-      }
-      val schema = spark.read.parquet(dir.toString).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val q = EventsStream.twsSessionsEventTime(stream, delay = "2 hours")
-        .toDF("user_id", "sess_events")
-        .writeStream.format("memory").queryName("ets_out")
-        .outputMode("append").start()
-      val sess = Events.sessionize(spark, sf)
-      val batchTotal = sess.agg(sum("n_sessions")).head().getLong(0)
-      val deadline = System.currentTimeMillis() + 120000L
-      var drained = 0L
-      while (drained < batchTotal && System.currentTimeMillis() < deadline) {
-        Thread.sleep(500L)
-        drained = spark.table("ets_out")
-          .filter(col("user_id") =!= sentinelUser).count()
-      }
-      q.stop()
-      val out = spark.table("ets_out")
-        .filter(col("user_id") =!= sentinelUser)
-      // every session closed exactly once, events conserved, and the
-      // per-user session-size MULTISET equals the batch twin's — the
-      // event-time close decision reproduces gap semantics exactly
-      // even with cross-batch disorder
-      assert(out.count() == batchTotal,
-        s"drained=${out.count()}, want $batchTotal")
-      val nEvents = graft.sources.Tables.load(spark, sf, "events").count()
-      assert(out.agg(sum("sess_events")).head().getLong(0) == nEvents)
-      val streamedPerUser = out.groupBy("user_id")
-        .agg(count(lit(1)).as("n"), max("sess_events").as("mx"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-      val batchPerUser = sess
-        .select("user_id", "n_sessions", "max_session_events").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(streamedPerUser == batchPerUser)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    // fixture: time-chunk the events into 3 files, then DEFER the
+    // last hour of each chunk into the following file — real
+    // cross-batch disorder, bounded by 1h < the 2h watermark delay
+    // so nothing is late-dropped; a 4th sentinel file pushes the
+    // watermark past every (max + gap) expiry, standing in for the
+    // production stream that keeps flowing
+    val ev = graft.sources.Tables.load(spark, sf, "events")
+      .select(col("user_id").cast("long").as("user_id"), col("ts"))
+      .collect().map(r => (r.getLong(0), r.getTimestamp(1)))
+      .sortBy(_._2.getTime)
+    val tsMs = ev.map(_._2.getTime)
+    val (minMs, maxMs) = (tsMs.min, tsMs.max)
+    val cut1 = minMs + (maxMs - minMs) / 3
+    val cut2 = minMs + 2 * (maxMs - minMs) / 3
+    val hourMs = 3600000L
+    def fileOf(ms: Long): Int = {
+      val base = if (ms < cut1) 0 else if (ms < cut2) 1 else 2
+      // within an hour below a cut -> deferred to the next file
+      if (base == 0 && ms >= cut1 - hourMs) 1
+      else if (base == 1 && ms >= cut2 - hourMs) 2
+      else base
     }
+    val sentinelUser = 10000000L
+    val gapMs = 1800000L
+    val sentinelMs = maxMs + gapMs + 2 * hourMs + hourMs
+    val dir = java.nio.file.Files.createTempDirectory("graft-ets")
+    import spark.implicits._
+    for (f <- 0 to 3) {
+      val rows =
+        if (f == 3) Seq((sentinelUser, new java.sql.Timestamp(sentinelMs)))
+        else ev.filter(r => fileOf(r._2.getTime) == f).toSeq
+      val tmp = java.nio.file.Files.createTempDirectory(s"graft-etsw$f")
+      rows.toDF("user_id", "ts").coalesce(1)
+        .write.mode("overwrite").parquet(tmp.toString)
+      val part = new java.io.File(tmp.toString).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(dir.toFile, f"f$f%02d.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(System.currentTimeMillis() - (10 - f) * 10000L)
+    }
+    val schema = spark.read.parquet(dir.toString).schema
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+    val q = EventsStream.startMemorySink(
+      EventsStream.twsSessionsEventTime(stream, delay = "2 hours")
+        .toDF("user_id", "sess_events"),
+      "ets_out", rocksDb = true)
+    val sess = Events.sessionize(spark, sf)
+    val batchTotal = sess.agg(sum("n_sessions")).head().getLong(0)
+    val deadline = System.currentTimeMillis() + 120000L
+    var drained = 0L
+    while (drained < batchTotal && System.currentTimeMillis() < deadline) {
+      Thread.sleep(500L)
+      drained = spark.table("ets_out")
+        .filter(col("user_id") =!= sentinelUser).count()
+    }
+    q.stop()
+    val out = spark.table("ets_out")
+      .filter(col("user_id") =!= sentinelUser)
+    // every session closed exactly once, events conserved, and the
+    // per-user session-size MULTISET equals the batch twin's — the
+    // event-time close decision reproduces gap semantics exactly
+    // even with cross-batch disorder
+    assert(out.count() == batchTotal,
+      s"drained=${out.count()}, want $batchTotal")
+    val nEvents = graft.sources.Tables.load(spark, sf, "events").count()
+    assert(out.agg(sum("sess_events")).head().getLong(0) == nEvents)
+    val streamedPerUser = out.groupBy("user_id")
+      .agg(count(lit(1)).as("n"), max("sess_events").as("mx"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    val batchPerUser = sess
+      .select("user_id", "n_sessions", "max_session_events").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(streamedPerUser == batchPerUser)
   }
 
   test("EVENT-TIME sessions: a continuously active key emits its " +
     "watermark-proven PREFIX session without any timer firing (state " +
     "holds only the undecided tail — r13 ADVICE)") {
     import org.apache.spark.sql.functions._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      // One key, three sessions, one file per session. The sliding
-      // timer (max+gap) NEVER fires before the sentinel: each new
-      // file re-slides it past the watermark. Pre-r14 the sink stayed
-      // empty until the sentinel drain; with prefix emission session
-      // A (2 events at hours 0.0/0.1) must appear once file 2's batch
-      // runs (watermark there = file-1 max 5.1h − 2h delay = 3.1h ≥
-      // A-end 0.1h + gap 0.5h).
-      val h = 3600000L
-      val files = Seq(
-        Seq(0L, (0.1 * h).toLong),            // session A (2 events)
-        Seq(5 * h, (5.1 * h).toLong),         // session B (2 events)
-        Seq(10 * h))                          // session C (1 event)
-      val dir = java.nio.file.Files.createTempDirectory("graft-ets-prefix")
-      def writeFile(idx: Int, user: Long, ts: Seq[Long]): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft-etsp$idx")
-        ts.map(ms => (user, new java.sql.Timestamp(ms)))
-          .toDF("user_id", "ts").coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(dir.toFile, f"f$idx%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // strictly ascending mtimes pin the per-trigger file order
-        dst.setLastModified(System.currentTimeMillis() - (10 - idx) * 10000L)
-        ()
-      }
-      files.zipWithIndex.foreach { case (ts, i) => writeFile(i, 1L, ts) }
-      val schema = spark.read.parquet(dir.toString).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val q = EventsStream.twsSessionsEventTime(stream, delay = "2 hours")
-        .toDF("user_id", "sess_events")
-        .writeStream.format("memory").queryName("ets_prefix")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        // prefix path, not a timer: session A emitted while the key
-        // is still active and B + C remain undecided in state
-        val early = spark.table("ets_prefix").collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        assert(early.toSeq == Seq((1L, 2L)),
-          s"want only prefix session A (2 events), got ${early.toSeq}")
-        // sentinel flush drains the rest via the timer path
-        writeFile(3, 999L, Seq(20 * h))
-        q.processAllAvailable()
-        val deadline = System.currentTimeMillis() + 60000L
-        while (spark.table("ets_prefix").filter(col("user_id") === 1L)
-          .count() < 3 && System.currentTimeMillis() < deadline)
-          Thread.sleep(250L)
-      } finally q.stop()
-      val all = spark.table("ets_prefix").filter(col("user_id") === 1L)
-        .collect().map(r => r.getLong(1)).sorted.toSeq
-      assert(all == Seq(1L, 2L, 2L), s"drained sessions: $all")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    import spark.implicits._
+    // One key, three sessions, one file per session. The sliding
+    // timer (max+gap) NEVER fires before the sentinel: each new
+    // file re-slides it past the watermark. Pre-r14 the sink stayed
+    // empty until the sentinel drain; with prefix emission session
+    // A (2 events at hours 0.0/0.1) must appear once file 2's batch
+    // runs (watermark there = file-1 max 5.1h − 2h delay = 3.1h ≥
+    // A-end 0.1h + gap 0.5h).
+    val h = 3600000L
+    val files = Seq(
+      Seq(0L, (0.1 * h).toLong),            // session A (2 events)
+      Seq(5 * h, (5.1 * h).toLong),         // session B (2 events)
+      Seq(10 * h))                          // session C (1 event)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ets-prefix")
+    def writeFile(idx: Int, user: Long, ts: Seq[Long]): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory(s"graft-etsp$idx")
+      ts.map(ms => (user, new java.sql.Timestamp(ms)))
+        .toDF("user_id", "ts").coalesce(1)
+        .write.mode("overwrite").parquet(tmp.toString)
+      val part = new java.io.File(tmp.toString).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(dir.toFile, f"f$idx%02d.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      // strictly ascending mtimes pin the per-trigger file order
+      dst.setLastModified(System.currentTimeMillis() - (10 - idx) * 10000L)
+      ()
     }
+    files.zipWithIndex.foreach { case (ts, i) => writeFile(i, 1L, ts) }
+    val schema = spark.read.parquet(dir.toString).schema
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+    val q = EventsStream.startMemorySink(
+      EventsStream.twsSessionsEventTime(stream, delay = "2 hours")
+        .toDF("user_id", "sess_events"),
+      "ets_prefix", rocksDb = true)
+    try {
+      q.processAllAvailable()
+      // prefix path, not a timer: session A emitted while the key
+      // is still active and B + C remain undecided in state
+      val early = spark.table("ets_prefix").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(early.toSeq == Seq((1L, 2L)),
+        s"want only prefix session A (2 events), got ${early.toSeq}")
+      // sentinel flush drains the rest via the timer path
+      writeFile(3, 999L, Seq(20 * h))
+      q.processAllAvailable()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (spark.table("ets_prefix").filter(col("user_id") === 1L)
+        .count() < 3 && System.currentTimeMillis() < deadline)
+        Thread.sleep(250L)
+    } finally q.stop()
+    val all = spark.table("ets_prefix").filter(col("user_id") === 1L)
+      .collect().map(r => r.getLong(1)).sorted.toSeq
+    assert(all == Seq(1L, 2L, 2L), s"drained sessions: $all")
   }
 
   test("EVENT-TIME sessions SOAK: across a 3,000-event replay of one " +
     "continuously active key, buffered state stays bounded by the " +
     "watermark lag + open tail, never the history (r14 verdict #4)") {
     import org.apache.spark.sql.functions._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     EventsStream.SessionEventTimeProcessor.maxTail.reset()
     EventsStream.SessionEventTimeProcessor.instrument = true
     try {
@@ -472,10 +426,10 @@ class StreamingSpec extends SparkSpec {
       val schema = spark.read.parquet(dir.toString).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val q = EventsStream.twsSessionsEventTime(stream, delay = "1 hour")
-        .toDF("user_id", "sess_events")
-        .writeStream.format("memory").queryName("ets_soak")
-        .outputMode("append").start()
+      val q = EventsStream.startMemorySink(
+        EventsStream.twsSessionsEventTime(stream, delay = "1 hour")
+          .toDF("user_id", "sess_events"),
+        "ets_soak", rocksDb = true)
       try {
         q.processAllAvailable()
         // sentinel flush drains the undecided tail via the timer path
@@ -501,41 +455,24 @@ class StreamingSpec extends SparkSpec {
       assert(maxTail <= 110L,
         s"buffered tail reached $maxTail events — state is tracking " +
           "history, not the watermark-lag bound")
-    } finally {
-      EventsStream.SessionEventTimeProcessor.instrument = false
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    } finally EventsStream.SessionEventTimeProcessor.instrument = false
   }
 
   test("streaming CUSUM equals the batch mapPartitions fold row-for-row") {
     import org.apache.spark.sql.functions._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batch = graft.sources.Tables.load(spark, sf, "events")
-        .filter(col("user_id") < 3 && col("value").isNotNull)
-      val mu = batch.groupBy("user_id").agg(
-        (sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-          .cast("double") / count(lit(1))).as("mu"))
-      val q = EventsStream.startMemorySink(
-        EventsStream.cusumStream(
-          EventsStream.readEvents(spark, streamDir)
-            .filter(col("user_id") < 3 && col("value").isNotNull),
-          mu, slack = 5.0, threshold = 50.0)
-          .toDF("user_id", "event_id", "x", "cusum_pos", "cusum_neg", "alarm"),
-        "cusum_out", "append")
-      q.processAllAvailable(); q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val batch = graft.sources.Tables.load(spark, sf, "events")
+      .filter(col("user_id") < 3 && col("value").isNotNull)
+    val mu = batch.groupBy("user_id").agg(
+      (sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
+        .cast("double") / count(lit(1))).as("mu"))
+    val q = EventsStream.startMemorySink(
+      EventsStream.cusumStream(
+        EventsStream.readEvents(spark, streamDir)
+          .filter(col("user_id") < 3 && col("value").isNotNull),
+        mu, slack = 5.0, threshold = 50.0)
+        .toDF("user_id", "event_id", "x", "cusum_pos", "cusum_neg", "alarm"),
+      "cusum_out", rocksDb = true)
+    q.processAllAvailable(); q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getBoolean(5))).sorted.toSeq
@@ -569,35 +506,24 @@ class StreamingSpec extends SparkSpec {
     }
     // the LATE half of the day lands first…
     land("01.parquet", Seq((1L, 2000000L, 10L, 1.0), (1L, 3000000L, 11L, 2.0)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = spark.read.parquet(watch.toString).schema
-      val stream = spark.readStream.schema(schema).parquet(watch.toString)
-      val baseline = Seq((1L, 0.0)).toDF("user_id", "mu")
-      val q = EventsStream.startMemorySink(
-        EventsStream.cusumStream(stream, baseline, slack = 0.0,
-          threshold = 100.0)
-          .toDF("user_id", "event_id", "x", "cusum_pos", "cusum_neg", "alarm"),
-        "cusum_ooo_out", "append")
-      q.processAllAvailable() // folds the late file
-      // …then the EARLY file arrives: replaying it would rewrite
-      // history the fold already consumed
-      land("02.parquet", Seq((1L, 1000000L, 9L, 5.0)))
-      val e = intercept[Exception] { q.processAllAvailable(); q.stop() }
-      def chain(t: Throwable): String =
-        if (t == null) "" else t.getMessage + "\n" + chain(t.getCause)
-      assert(chain(e).contains("CUSUM replay contract") ||
-        chain(e).contains("replay contract"),
-        s"expected the ordered-replay contract in the failure, got: ${chain(e).take(500)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val schema = spark.read.parquet(watch.toString).schema
+    val stream = spark.readStream.schema(schema).parquet(watch.toString)
+    val baseline = Seq((1L, 0.0)).toDF("user_id", "mu")
+    val q = EventsStream.startMemorySink(
+      EventsStream.cusumStream(stream, baseline, slack = 0.0,
+        threshold = 100.0)
+        .toDF("user_id", "event_id", "x", "cusum_pos", "cusum_neg", "alarm"),
+      "cusum_ooo_out", rocksDb = true)
+    q.processAllAvailable() // folds the late file
+    // …then the EARLY file arrives: replaying it would rewrite
+    // history the fold already consumed
+    land("02.parquet", Seq((1L, 1000000L, 9L, 5.0)))
+    val e = intercept[Exception] { q.processAllAvailable(); q.stop() }
+    def chain(t: Throwable): String =
+      if (t == null) "" else t.getMessage + "\n" + chain(t.getCause)
+    assert(chain(e).contains("CUSUM replay contract") ||
+      chain(e).contains("replay contract"),
+      s"expected the ordered-replay contract in the failure, got: ${chain(e).take(500)}")
   }
 
   test("streaming session windows agree with the batch lag/cumsum sessionization") {
