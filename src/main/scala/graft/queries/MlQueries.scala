@@ -219,8 +219,8 @@ object MlQueries {
     * fitted CrossValidatorModel is MEMOIZED under the git-tracked
     * repo-root artifacts/automl_cv (committed, so it survives a
     * workspace wipe — r14 verdict #1) keyed by a lineitem CONTENT
-    * fingerprint + protocol tag (the
-    * ivfLoadOrBuild discipline of the knn_*_prebuilt rows), so repeat
+    * fingerprint + protocol tag (one [[graft.sources.Artifacts.memo]],
+    * like the knn_*_prebuilt rows), so repeat
     * gate runs pay a model load — every witness below introspects
     * the loaded model (avgMetrics, paramMaps, folds, bestModel all
     * persist), so a stale or corrupt memo still flips the row red.
@@ -241,33 +241,21 @@ object MlQueries {
     // is now CONTENT-fingerprinted (head+tail SHA-256 covers the
     // parquet footer's row counts/stats), so a same-size copy of
     // different data rebuilds rather than serving a stale model.
-    val dir = graft.sources.Artifacts.dir(
-      "automl_cv/" + d.replaceAll("[^A-Za-z0-9.]+", "_"))
+    val dir = graft.sources.Artifacts.memoDir(
+      graft.sources.Artifacts.dir("automl_cv"), d)
     val tag = s"grid=18x5 kMod=$kMod folds=5 v2"
     val src = new java.io.File(s"$d/lineitem.parquet")
-    val fingerprint = graft.sources.Artifacts.contentFingerprint(src, tag)
-    val stampFile = new java.io.File(s"$dir/stamp")
-    val fresh = stampFile.exists &&
-      java.nio.file.Files.readString(stampFile.toPath) == fingerprint &&
-      new java.io.File(s"$dir/model").exists
-    val cv =
-      if (fresh)
-        org.apache.spark.ml.tuning.CrossValidatorModel.load(s"$dir/model")
-      else {
-        // stamp written LAST, stale stamp removed FIRST (the
-        // dfLoadOrBuild crash-consistency rule)
-        java.nio.file.Files.deleteIfExists(stampFile.toPath)
-        // parallelism 18: at most 18 of the 90 fold fits in flight,
-        // one fold's worth; the heavy (maxIter=100, depth=10) chains
-        // bound the wall
-        val trained = AutoML.train(li, "l_extendedprice",
-          Seq("l_quantity", "l_discount", "l_tax"),
-          AutoML.Regression, numFolds = 5, parallelism = 18,
-          quick = false)
-        trained.model.write.overwrite().save(s"$dir/model")
-        java.nio.file.Files.writeString(stampFile.toPath, fingerprint)
-        trained.model
-      }
+    graft.sources.Artifacts.memo(dir,
+      graft.sources.Artifacts.contentFingerprint(src, tag), Seq("model")) {
+      // parallelism 18: at most 18 of the 90 fold fits in flight, one
+      // fold's worth; the heavy (maxIter=100, depth=10) chains bound
+      // the wall
+      AutoML.train(li, "l_extendedprice",
+        Seq("l_quantity", "l_discount", "l_tax"),
+        AutoML.Regression, numFolds = 5, parallelism = 18,
+        quick = false).model.write.overwrite().save(s"$dir/model")
+    }
+    val cv = org.apache.spark.ml.tuning.CrossValidatorModel.load(s"$dir/model")
     val metrics = cv.avgMetrics
     val best = cv.bestModel.asInstanceOf[org.apache.spark.ml.PipelineModel]
       .stages.last

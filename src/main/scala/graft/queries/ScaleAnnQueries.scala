@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.scaleops.{Dedup, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 
 /** ANN / similarity-search gate queries (knn_* rows): brute, LSH,
   * IVF (+SQ8/PQ/prebuilt/incremental), the cost router, MMR — plus
@@ -305,8 +305,8 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * route + code-scan + refine only — never a KMeans refit or a
     * corpus re-encode per query batch (the knn_ivf_prebuilt
     * precedent: 11.6 → 1.1 s). Same derived sizing and 0.75 bound as
-    * knn_ivf_sq8; the codes memo invalidates with the index (the
-    * loadOrBuild rebuild deletes it). */
+    * knn_ivf_sq8; the codes are a part of the index memo, so
+    * [[Artifacts.memo]] deletes them when it rebuilds the index. */
   def knnIvfSq8Prebuilt(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
@@ -316,11 +316,8 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       tag = s"nList=${p.nList}")(
       Similarity.ivfBuild(emb, "vec_id", "embedding", p.nList,
         knownN = Some(nCorpus)))
-    val codesPath = ivfMemoDir("target/ivf_index_sq8", d) + "/sq8_codes"
-    if (!new java.io.File(s"$codesPath/_SUCCESS").exists)
-      graft.sources.Sinks.writeScanSized(Similarity.sq8Codes(index),
-        codesPath)
-    val codes = s.read.parquet(codesPath)
+    val codes = Similarity.sq8CodesCached(s, index,
+      Some(Artifacts.memoDir("target/ivf_index_sq8", d)))
     knnCertify(
       Similarity.knnIvfSq8Indexed(index, codes, "vec_id", "embedding", q,
         k = 5, nProbe = p.nProbe, refine = 4),
@@ -387,22 +384,9 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       tag = s"nList=${p.nList}")(
       Similarity.ivfBuild(emb, "vec_id", "embedding", p.nList,
         knownN = Some(nCorpus)))
-    val base = ivfMemoDir("target/ivf_index_pq", d)
-    val cbPath = s"$base/pq_cb"
-    if (!new java.io.File(s"$cbPath/_SUCCESS").exists) {
-      val cb = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
-        ks = 256, knownN = Some(nCorpus))
-      import s.implicits._
-      cb.toSeq.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "v")
-        .coalesce(1).write.mode("overwrite").parquet(cbPath)
-    }
-    val cb = s.read.parquet(cbPath).orderBy("i").collect()
-      .map(_.getDouble(1))
-    val codesPath = s"$base/pq_codes"
-    if (!new java.io.File(s"$codesPath/_SUCCESS").exists)
-      graft.sources.Sinks.writeScanSized(Similarity.pqCodes(index, cb),
-        codesPath)
-    val codes = s.read.parquet(codesPath)
+    val (cb, codes) = Similarity.pqArtifactsCached(s, emb, "vec_id",
+      "embedding", index, nCorpus,
+      Some(Artifacts.memoDir("target/ivf_index_pq", d)))
     knnCertify(
       Similarity.knnIvfPqIndexed(index, codes, cb, "vec_id", "embedding",
         q, k = 5, nProbe = p.nProbe,
@@ -496,6 +480,78 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       nList = 8, nProbe = 8)
   }
 
+  /** In-JVM residency for loaded IVF indexes: an index handle is a
+    * driver-side KMeansModel plus a LAZY scan of the cells parquet,
+    * and a hot index re-read from disk on every query batch is not
+    * how a serving path behaves — vector stores keep live indexes
+    * resident. Keyed by (session, dir, source fingerprint) so a
+    * regenerated dataset or a new session can never be served a stale
+    * handle. An access-ordered LRU (r12 verdict): at 33+ live
+    * consumers the old ConcurrentHashMap's `keys().nextElement()`
+    * eviction could drop the HOTTEST handle. [[graft.scaleops.LruCache]]
+    * carries the eviction contract (and its own spec pin). */
+  protected val ivfResident =
+    new graft.scaleops.LruCache[String, Similarity.IvfIndex](32)
+
+  // stale-index guard: a memo is keyed by dataset DIR NAME, so a
+  // regenerated dataset under the same path would otherwise serve an
+  // index fitted on the old rows — surfacing as a baffling gate
+  // failure instead of a rebuild. The stamp is a CONTENT fingerprint
+  // of the source parquet (per-file head+tail SHA-256 — covers the
+  // footer stats, so a same-size copy of different data rebuilds and a
+  // byte-identical regeneration stays warm; r15, the ADVICE-#3 fix
+  // generalized from the CV memo) plus the caller's `tag` (e.g. the
+  // derived nList, so a sizing-rule change invalidates too).
+  // "files=scan-sized-v4": layout version in the stamp — memos written
+  // by the old 1-file writer (r15: v3) rebuild once under the
+  // scan-sized writer (Sinks.writeScanSized) instead of serving
+  // single-task scans forever; v4 keeps a first write within 2x of its
+  // file target, so a memo on disk has the layout a fresh build gives
+  private def embeddingsFingerprint(d: String, tag: String): String =
+    Artifacts.contentFingerprint(new java.io.File(s"$d/embeddings.parquet"),
+      s"$tag files=scan-sized-v4")
+
+  /** Load a memoized on-disk IVF index, building + saving it through
+    * [[Artifacts.memo]] on first use — the shared protocol of every
+    * prebuilt-index gate query. The resident handle is reused only when
+    * the memo was fresh. */
+  protected def ivfLoadOrBuild(s: SparkSession, baseDir: String, d: String,
+                             tag: String = "")
+                            (build: => Similarity.IvfIndex): Similarity.IvfIndex = {
+    val dir = Artifacts.memoDir(baseDir, d)
+    val fingerprint = embeddingsFingerprint(d, tag)
+    val fresh = Artifacts.memo(dir, fingerprint, Similarity.ivfMemoParts)(
+      Similarity.ivfSave(build, dir))
+    val key = s"${System.identityHashCode(s)}\n$dir\n$fingerprint"
+    // a rebuilt index replaced the cells a resident handle scans
+    (if (fresh) ivfResident.get(key) else None).getOrElse {
+      val loaded = Similarity.ivfLoad(s, dir)
+      // LRU at the cap, never clear(): r12's full clear at 8 entries
+      // thrashed EVERY prebuilt row in the same session, and r12's
+      // arbitrary-entry eviction could drop the hottest handle under
+      // 33+ live consumers. A handle is kilobytes of driver memory
+      // (centroids + a parquet path), so 32 is still nothing.
+      ivfResident.put(key, loaded)
+      loaded
+    }
+  }
+
+  /** Disk memo for a derived DataFrame (the [[ivfLoadOrBuild]]
+    * discipline for plain parquet artifacts, e.g. the standing kNN
+    * graph an incremental update extends): same source-fingerprint +
+    * tag stamp, rebuilt through [[Artifacts.memo]] on mismatch. */
+  protected def dfLoadOrBuild(s: SparkSession, baseDir: String, d: String,
+                              tag: String = "")
+                             (build: => DataFrame): DataFrame = {
+    val dir = Artifacts.memoDir(baseDir, d)
+    // scan-sized (r15): a 1-2-file df memo made every consumer's heavy
+    // first stage (e.g. the planted-corpus seed scoring) run 1-2 tasks
+    // on 32 cores
+    Artifacts.memo(dir, embeddingsFingerprint(d, tag), Seq("df"))(
+      graft.sources.Sinks.writeScanSized(build, s"$dir/df"))
+    s.read.parquet(s"$dir/df")
+  }
+
   /** IVF search over a PREBUILT on-disk index — the build/search
     * split that matters at 100 TB: centroids + cell assignments are
     * fitted and persisted ONCE ([[Similarity.ivfSave]]); every later
@@ -509,118 +565,6 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * measured recall matches knn_ivf's 0.66/0.84/0.70). Save/load
     * fidelity — loaded search ≡ the saved in-memory index's search,
     * row for row — is pinned by SimilaritySpec. */
-  /** Load a memoized on-disk IVF index, building + saving it on first
-    * use — the shared protocol of both prebuilt-index gate queries
-    * (one definition, so a change to the memoization contract — e.g.
-    * partial-write invalidation — lands everywhere at once). */
-  /** In-JVM residency for loaded IVF indexes: an index handle is a
-    * driver-side KMeansModel plus a LAZY scan of the cells parquet,
-    * and a hot index re-read from disk on every query batch is not
-    * how a serving path behaves — vector stores keep live indexes
-    * resident. Keyed by (session, dir, source fingerprint) so a
-    * regenerated dataset or a new session can never be served a stale
-    * handle; bounded at 8 entries (a handle is kilobytes). */
-  /** Access-ordered LRU (r12 verdict): at 33+ live consumers the old
-    * ConcurrentHashMap's `keys().nextElement()` eviction could drop
-    * the HOTTEST handle. [[graft.scaleops.LruCache]] carries the
-    * eviction contract (and its own spec pin). */
-  protected val ivfResident =
-    new graft.scaleops.LruCache[String, Similarity.IvfIndex](32)
-
-  protected def ivfMemoDir(baseDir: String, d: String): String =
-    baseDir + "/" + d.replaceAll("[^A-Za-z0-9.]+", "_")
-
-  protected def ivfLoadOrBuild(s: SparkSession, baseDir: String, d: String,
-                             tag: String = "")
-                            (build: => Similarity.IvfIndex): Similarity.IvfIndex = {
-    val dir = ivfMemoDir(baseDir, d)
-    // stale-index guard: the memo is keyed by dataset DIR NAME, so a
-    // regenerated dataset under the same path would otherwise serve an
-    // index fitted on the old rows — surfacing as a baffling gate
-    // failure instead of a rebuild. Stamp the saved index with a
-    // CONTENT fingerprint of the source parquet (per-file head+tail
-    // SHA-256 — covers the footer stats, so a same-size copy of
-    // different data rebuilds and a byte-identical regeneration stays
-    // warm; r15, the ADVICE-#3 fix generalized from the CV memo) plus
-    // the caller's `tag` (e.g. the derived nList, so a sizing-rule
-    // change invalidates too) — and rebuild on mismatch.
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    // "files=scan-sized-v4": layout version in the stamp — memos
-    // written by the old 1-file writer (r15: v3) rebuild once under the
-    // scan-sized writer (Sinks.writeScanSized) instead of serving
-    // single-task scans forever; v4 keeps a first write within 2x of
-    // its file target, so a memo on disk has the layout a fresh build
-    // gives
-    val fingerprint =
-      graft.sources.Artifacts.contentFingerprint(src, s"$tag files=scan-sized-v4")
-    val stampFile = new java.io.File(s"$dir/source_fingerprint.txt")
-    val fresh = new java.io.File(s"$dir/cells/_SUCCESS").exists &&
-      stampFile.exists && {
-        val st = java.nio.file.Files.readString(stampFile.toPath)
-        st == fingerprint
-      }
-    val key = s"${System.identityHashCode(s)}\n$dir\n$fingerprint"
-    if (fresh) {
-      ivfResident.get(key) match {
-        case Some(resident) => return resident
-        case None => ()
-      }
-    }
-    if (!fresh) {
-      // derived artifacts beside the index (the SQ8/PQ codes
-      // parquets, the PQ codebook) are pure functions of the cell
-      // table / source corpus: a rebuilt index must invalidate them
-      // with it
-      for (name <- Seq("sq8_codes", "pq_codes", "pq_cb"))
-        graft.sources.Artifacts.deleteRecursively(
-          java.nio.file.Paths.get(s"$dir/$name"))
-      Similarity.ivfSave(build, dir)
-      java.nio.file.Files.writeString(stampFile.toPath, fingerprint)
-    }
-    val loaded = Similarity.ivfLoad(s, dir)
-    // LRU at the cap, never clear(): r12's full clear at 8 entries
-    // thrashed EVERY prebuilt row in the same session, and r12's
-    // arbitrary-entry eviction could drop the hottest handle under
-    // 33+ live consumers. A handle is kilobytes of driver memory
-    // (centroids + a parquet path), so 32 is still nothing.
-    ivfResident.put(key, loaded)
-    loaded
-  }
-
-  /** Disk memo for a derived DataFrame (the [[ivfLoadOrBuild]]
-    * discipline for plain parquet artifacts, e.g. the standing kNN
-    * graph an incremental update extends): same source-fingerprint +
-    * tag staleness rule, rebuild on mismatch. */
-  protected def dfLoadOrBuild(s: SparkSession, baseDir: String, d: String,
-                              tag: String = "")
-                             (build: => DataFrame): DataFrame = {
-    val dir = ivfMemoDir(baseDir, d)
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    // layout version — see ivfLoadOrBuild: old 1-file memos rebuild
-    // once under the scan-sized writer
-    val fingerprint =
-      graft.sources.Artifacts.contentFingerprint(src, s"$tag files=scan-sized-v4")
-    val stampFile = new java.io.File(s"$dir/source_fingerprint.txt")
-    val fresh = new java.io.File(s"$dir/df/_SUCCESS").exists &&
-      stampFile.exists &&
-      java.nio.file.Files.readString(stampFile.toPath) == fingerprint
-    if (!fresh) {
-      // stamp is written LAST, and any stale stamp is removed FIRST
-      // (the ivfLoadOrBuild invalidation rule): if the parquet
-      // overwrite succeeds but the process dies before the new stamp
-      // lands, an interleaved later run must see no-stamp → rebuild,
-      // never old-stamp + new _SUCCESS.
-      java.nio.file.Files.deleteIfExists(stampFile.toPath)
-      // scan-sized (r15): a 1-2-file df memo made every consumer's
-      // heavy first stage (e.g. the planted-corpus seed scoring) run
-      // 1-2 tasks on 32 cores
-      graft.sources.Sinks.writeScanSized(build, s"$dir/df")
-      new java.io.File(dir).mkdirs()
-      java.nio.file.Files.writeString(stampFile.toPath, fingerprint)
-    }
-    s.read.parquet(s"$dir/df")
-  }
-
   def knnIvfPrebuilt(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
@@ -677,10 +621,15 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       reuse = 1L)
     // reuse=100 declares an index lifetime of many batches — the
     // serving cache makes that real (warm reps pay routing + search
-    // only, exactly what the cost model's amortization says)
+    // only, exactly what the cost model's amortization says). The
+    // index's own stamp knows only (n, dim, nList, seed), so it sits
+    // under a memo stamped with the corpus's content fingerprint: a
+    // regenerated corpus of the same shape drops the index
+    val dir = Artifacts.memoDir("target/knn_auto_index", d)
+    Artifacts.memo(dir, embeddingsFingerprint(d, "knn_auto"),
+      Seq("index"))(())
     val many = Similarity.knnAuto(emb, "vec_id", "embedding", q, k = 5,
-      reuse = 100L,
-      indexDir = Some(ivfMemoDir("target/knn_auto_index", d)))
+      reuse = 100L, indexDir = Some(s"$dir/index"))
     val brute = Similarity.knnBrute(emb, "vec_id", "embedding", q, k = 5)
       .localCheckpoint(eager = false) // twin feeds 2 certifications
     val oneCommon = one.select("query_id", "rank", "neighbor_id", "cos")
@@ -1079,11 +1028,8 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     // persisted SQ8 codes beside the index (the knnIvfSq8Prebuilt
     // protocol — pure function of the cell table, invalidated with
     // it): the quantized filtered route is search-only too
-    val codesPath = ivfMemoDir("target/knn_filtered_index", d) + "/sq8_codes"
-    if (!new java.io.File(s"$codesPath/_SUCCESS").exists)
-      graft.sources.Sinks.writeScanSized(Similarity.sq8Codes(index),
-        codesPath)
-    val codes = s.read.parquet(codesPath)
+    val codes = Similarity.sq8CodesCached(s, index,
+      Some(Artifacts.memoDir("target/knn_filtered_index", d)))
     // the gate already counted n and nF for its witnesses; pass all
     // three counts through (r12 ADVICE: the two auto calls otherwise
     // re-ran ~six full corpus scans re-deriving them)
@@ -1158,22 +1104,9 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       tag = s"nList=${p.nList}")(
       Similarity.ivfBuild(emb, "vec_id", "embedding", p.nList,
         knownN = Some(n)))
-    val base = ivfMemoDir("target/knn_filtered_index", d)
-    val cbPath = s"$base/pq_cb"
-    if (!new java.io.File(s"$cbPath/_SUCCESS").exists) {
-      val cb = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
-        ks = 256, knownN = Some(n))
-      import s.implicits._
-      cb.toSeq.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "v")
-        .coalesce(1).write.mode("overwrite").parquet(cbPath)
-    }
-    val cb = s.read.parquet(cbPath).orderBy("i").collect()
-      .map(_.getDouble(1))
-    val codesPath = s"$base/pq_codes"
-    if (!new java.io.File(s"$codesPath/_SUCCESS").exists)
-      graft.sources.Sinks.writeScanSized(Similarity.pqCodes(index, cb),
-        codesPath)
-    val codes = s.read.parquet(codesPath)
+    val (cb, codes) = Similarity.pqArtifactsCached(s, emb, "vec_id",
+      "embedding", index, n,
+      Some(Artifacts.memoDir("target/knn_filtered_index", d)))
     knnCertify(
       Similarity.ivfSearchFilteredPq(index, codes, cb, "vec_id",
         "embedding", q, k = 3, m = 8, ks = 256, nProbe = p.nProbe,

@@ -605,6 +605,14 @@ object Similarity {
     }
   }
 
+  /** The parts of an IVF memo dir that a rebuild replaces: the index
+    * ([[ivfSave]]'s `kmeans` and `cells`) and everything derived from
+    * it ([[pqArtifactsCached]]'s `pq_cb`/`pq_codes`,
+    * [[sq8CodesCached]]'s `sq8_codes`) — the `parts` of every IVF
+    * [[graft.sources.Artifacts.memo]]. */
+  val ivfMemoParts: Seq[String] =
+    Seq("kmeans", "cells", "pq_cb", "pq_codes", "sq8_codes")
+
   def ivfSave(index: IvfIndex, dir: String): Unit = {
     index.model.write.overwrite().save(s"$dir/kmeans")
     // scan-sized (r15): the cell table is the hot probed scan of
@@ -1647,50 +1655,41 @@ object Similarity {
     * always sits on an index cache; without one every batch re-pays
     * the build the cost model amortized away). The stamp ties the
     * cache to (n, dim, nList, seed); the CALLER owns content-level
-    * invalidation — point a new corpus at a new dir (the gate adds a
-    * data fingerprint on top, ScaleAnnQueries.ivfLoadOrBuild). On a
-    * stamp miss the derived artifacts (PQ codebook/codes, SQ8 codes)
-    * are invalidated WITH the index: they are pure functions of
-    * (index, corpus), and the _SUCCESS-only checks below would
-    * otherwise feed stale codes from the old corpus to the new
-    * index. */
+    * invalidation — point a new corpus at a new dir (the `knn_auto`
+    * gate row does: its `indexDir` sits under a memo stamped with the
+    * corpus's content fingerprint, ScaleAnnQueries.knnAutoQ). On a
+    * stamp miss [[graft.sources.Artifacts.memo]] deletes the derived
+    * artifacts WITH the index ([[ivfMemoParts]]): they are pure
+    * functions of (index, corpus), and their caches below would
+    * otherwise feed stale codes from the old corpus to the new index.
+    * A hit reads the stamp and loads the index, nothing more. */
   private def ivfCachedIndex(spark: org.apache.spark.sql.SparkSession,
                              emb: DataFrame, idCol: String, vecCol: String,
                              p: IvfParams, seed: Long, n: Long, dim: Int,
-                             indexDir: Option[String]): IvfIndex = {
-    val tag = s"n=$n dim=$dim nList=${p.nList} seed=$seed"
+                             indexDir: Option[String]): IvfIndex =
     indexDir match {
       case None =>
         ivfBuild(emb, idCol, vecCol, p.nList, seed, knownN = Some(n))
       case Some(dir) =>
-        val stamp = new java.io.File(s"$dir/stamp")
-        if (stamp.exists &&
-          java.nio.file.Files.readString(stamp.toPath) == tag)
-          ivfLoad(spark, dir)
-        else {
-          for (name <- Seq("pq_cb", "pq_codes", "sq8_codes"))
-            graft.sources.Artifacts.deleteRecursively(
-              java.nio.file.Paths.get(s"$dir/$name"))
-          val idx = ivfBuild(emb, idCol, vecCol, p.nList, seed,
-            knownN = Some(n))
-          new java.io.File(dir).mkdirs()
-          ivfSave(idx, dir)
-          java.nio.file.Files.writeString(stamp.toPath, tag)
-          ivfLoad(spark, dir)
-        }
+        graft.sources.Artifacts.memo(dir,
+          s"n=$n dim=$dim nList=${p.nList} seed=$seed", ivfMemoParts)(
+          ivfSave(ivfBuild(emb, idCol, vecCol, p.nList, seed,
+            knownN = Some(n)), dir))
+        ivfLoad(spark, dir)
     }
-  }
 
   /** PQ codebook + codes under the [[ivfCachedIndex]] memo: with an
     * `indexDir`, the codebook parquet (`pq_cb`) and codes parquet
     * (`pq_codes`) are written once beside the index and every later
     * call loads them — two consecutive routed-PQ calls fit ZERO
     * KMeans (r13 verdict: a caller without a prebuilt codebook paid
-    * `pqTrain` per call). Without a dir, train/encode in-flight. */
-  private def pqArtifactsCached(spark: org.apache.spark.sql.SparkSession,
-                                emb: DataFrame, idCol: String,
-                                vecCol: String, index: IvfIndex, n: Long,
-                                indexDir: Option[String])
+    * `pqTrain` per call). Without a dir, train/encode in-flight. The
+    * only writer of `pq_cb` and `pq_codes`: the prebuilt gate rows call
+    * it over their own index memo. */
+  private[graft] def pqArtifactsCached(
+      spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
+      idCol: String, vecCol: String, index: IvfIndex, n: Long,
+      indexDir: Option[String])
       : (Array[Double], DataFrame) = indexDir match {
     case None =>
       val cb = pqTrain(emb, idCol, vecCol, 8, 256, knownN = Some(n))
@@ -1714,10 +1713,10 @@ object Similarity {
   }
 
   /** SQ8 codes under the same memo: encoded once beside the index
-    * (`sq8_codes`), loaded thereafter. */
-  private def sq8CodesCached(spark: org.apache.spark.sql.SparkSession,
-                             index: IvfIndex,
-                             indexDir: Option[String]): DataFrame =
+    * (`sq8_codes`), loaded thereafter. The only writer of `sq8_codes`. */
+  private[graft] def sq8CodesCached(
+      spark: org.apache.spark.sql.SparkSession, index: IvfIndex,
+      indexDir: Option[String]): DataFrame =
     indexDir match {
       case None => sq8Codes(index)
       case Some(dir) =>

@@ -4,7 +4,8 @@ import java.io.File
 import java.nio.file.{Files, Path, Paths}
 
 /** Repo-root-anchored, git-TRACKED artifact store for gate-critical
-  * memos (currently the m5 full-grid CrossValidatorModel).
+  * memos (currently the m5 full-grid CrossValidatorModel), and the one
+  * stamp protocol ([[Artifacts.memo]]) every on-disk memo goes through.
   *
   * Why it exists (r14 verdict #1): the m5 memo lived under gitignored
   * `target/automl_cv`, so a wiped workspace re-paid an ~11-minute cold
@@ -53,6 +54,35 @@ object Artifacts {
   /** Absolute path of a named tracked-artifact directory. */
   def dir(name: String): String =
     repoRoot.resolve("artifacts").resolve(name).toString
+
+  /** `base/<dataset>`: the memo directory of one dataset, its path
+    * flattened to a single safe name (`/root/testdata/sf0.01` →
+    * `_root_testdata_sf0.01`). */
+  def memoDir(base: String, dataset: String): String =
+    base + "/" + dataset.replaceAll("[^A-Za-z0-9.]+", "_")
+
+  /** The one on-disk memo protocol. If `dir/stamp` holds `stamp`, the
+    * memo is fresh: return true and touch nothing. Otherwise remove
+    * the stale stamp FIRST, delete each named part under `dir` (an
+    * artifact plus everything derived from it), run `build`, and write
+    * the stamp LAST; return false. A build that dies part-way leaves
+    * no stamp, so no later call, whatever stamp it asks for, reads the
+    * half-built parts as fresh. Files in `dir` that are not listed
+    * parts are left alone. */
+  def memo(dir: String, stamp: String, parts: Seq[String])
+          (build: => Unit): Boolean = {
+    val stampPath = Paths.get(dir, "stamp")
+    if (Files.exists(stampPath) && Files.readString(stampPath) == stamp)
+      true
+    else {
+      Files.deleteIfExists(stampPath)
+      parts.foreach(p => deleteRecursively(Paths.get(dir, p)))
+      build
+      Files.createDirectories(Paths.get(dir))
+      Files.writeString(stampPath, stamp)
+      false
+    }
+  }
 
   /** Content fingerprint of a dataset (parquet file or directory of
     * part files): one line per file of `name:length:sha256(head 8 KiB

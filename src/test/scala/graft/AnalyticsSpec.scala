@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.AnalyticsQueries
@@ -16,7 +15,7 @@ class AnalyticsSpec extends SparkSpec {
 
   /** Write a fixture table as `<dir>/<name>.parquet` and return dir. */
   private def fixtureDir(tables: (String, DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft_analytics").toString
+    val dir = tempDir("graft_analytics").toString
     tables.foreach { case (n, df) => df.write.parquet(s"$dir/$n.parquet") }
     dir
   }

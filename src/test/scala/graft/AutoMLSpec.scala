@@ -113,7 +113,7 @@ class AutoMLSpec extends SparkSpec {
   }
 
   test("model persistence round-trip (M9 memoization, task-scoped)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString + "/m"
+    val dir = tempDir("graft-model").toString + "/m"
     val df = cmapss().filter($"engine_no" <= 2)
     var trainCalls = 0
     def trainFn(): AutoML.Trained = {
@@ -206,7 +206,7 @@ class AutoMLSpec extends SparkSpec {
         m.transform(df).orderBy("id").select("prediction").collect().toSeq
       assert(predictions(ours) == predictions(reference))
 
-      val dir = java.nio.file.Files.createTempDirectory("graft-fpcv").toString + "/m"
+      val dir = tempDir("graft-fpcv").toString + "/m"
       ours.write.save(dir)
       val loaded = CrossValidatorModel.load(dir)
       def grids(m: CrossValidatorModel) = m.getEstimatorParamMaps.toSeq

@@ -20,7 +20,7 @@ class AvroSpec extends SparkSpec {
       Row(3L, -1, Double.MinPositiveValue, -0.0f, false, "", Array[Byte](), ts))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), st)
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro").toString
+    val dir = tempDir("graft-avro").toString
     graft.sources.Avro.write(df, dir)
     val back = graft.sources.Avro.read(spark, dir)
     assert(back.schema.map(f => (f.name, f.dataType)) ==
@@ -55,7 +55,7 @@ class AvroSpec extends SparkSpec {
   test("avro read parallelizes per file and unions all parts") {
     val df = spark.range(100).select(col("id"),
       concat(lit("doc"), col("id")).as("s"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro2").toString
+    val dir = tempDir("graft-avro2").toString
     graft.sources.Avro.write(df.repartition(5), dir)
     val back = graft.sources.Avro.read(spark, dir)
     assert(back.rdd.getNumPartitions == 5)

@@ -2,12 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed tables: pins the scale contract — co-bucketed equi-joins
   * and bucket-key aggregations run with ZERO Exchange, and results
   * are identical to the shuffled plans they replace. */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
+
+  override def afterAll(): Unit =
+    try graft.sources.Artifacts.deleteRecursively(wh)
+    finally super.afterAll()
 
   private lazy val spark: SparkSession = {
     // own session: needs a writable warehouse for saveAsTable and
@@ -15,7 +22,6 @@ class BucketingSpec extends AnyFunSuite {
     // sort-merge-join path the bucketing optimizes
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val wh = java.nio.file.Files.createTempDirectory("graft-warehouse")
     Sessions.builder()
       .master("local[4]")
       .appName("graft-bucketing-spec")

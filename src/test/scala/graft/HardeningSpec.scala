@@ -8,8 +8,21 @@ import graft.streaming.EventsStream
 /** Pins the r5 hardening fixes (ADVICE r4 + VERDICT r4 #6): KLL
   * sketch input validation, PII pattern boundaries, SQ8 zero-norm
   * guard, mixture-sampling sign totality, the state-partition
-  * derivation rule, and the one place a session conf is set. */
+  * derivation rule, the one place a session conf is set, and the one
+  * memo stamp protocol. */
 class HardeningSpec extends SparkSpec {
+
+  private val mainRoot = new java.io.File("src/main/scala/graft")
+  private def rel(f: java.io.File): String =
+    mainRoot.toPath.relativize(f.toPath).toString
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] = {
+    assert(d.isDirectory, s"run from the repository root: $d")
+    d.listFiles.toSeq.sortBy(_.getName).flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+  }
+
   import spark.implicits._
 
   // ---- KLL sketch deserialization ----------------------------------------
@@ -135,15 +148,8 @@ class HardeningSpec extends SparkSpec {
     // a stream's confs are set across its start() only, in one place;
     // query code that mutates the shared session leaks into every
     // later query of that session
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"run from the repository root: $root")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.sortBy(_.getName).flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-      }
     def mutates(l: String) = l.contains("conf.set(") || l.contains("conf.unset(")
-    val offenders = scalaFiles(root).flatMap { f =>
+    val offenders = scalaFiles(mainRoot).flatMap { f =>
       val lines = java.nio.file.Files.readAllLines(f.toPath)
         .toArray(Array.empty[String])
       val start =
@@ -155,7 +161,39 @@ class HardeningSpec extends SparkSpec {
         assert(start >= 0 && lines.indices.exists(i =>
           inStarter(i) && mutates(lines(i))), "startMemorySink not found")
       lines.indices.filter(i => mutates(lines(i)) && !inStarter(i))
-        .map(i => s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${lines(i).trim}")
+        .map(i => s"${rel(f)}:${i + 1}: ${lines(i).trim}")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("lint: stamps are read and written only in Artifacts.memo; " +
+    "_SUCCESS is checked only by Similarity's two derived caches") {
+    // one memo protocol: a hand-rolled stamp check elsewhere would
+    // bring back its own crash ordering, and a _SUCCESS check outside
+    // the derived caches would trust a directory the stamp no longer
+    // vouches for
+    val stampIo = (l: String) =>
+      l.contains("readString(") || l.contains("writeString(")
+    val caches = Seq("def pqArtifactsCached(", "def sq8CodesCached(")
+    val member = "  (/\\*\\*|def |private|protected|val |lazy ).*"
+    val offenders = scalaFiles(mainRoot).flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String])
+      val cacheLines: Set[Int] =
+        if (rel(f) != "scaleops/Similarity.scala") Set.empty
+        else caches.flatMap { c =>
+          val start = lines.indexWhere(_.contains(c))
+          assert(start >= 0, s"$c not found")
+          val end = lines.indexWhere(_.matches(member), start + 1)
+          assert((start until end).exists(i => lines(i).contains("_SUCCESS")),
+            s"$c no longer checks _SUCCESS")
+          start until end
+        }.toSet
+      val stampFile = Set("sources/Artifacts.scala", "Verify.scala")(rel(f))
+      lines.indices.filter { i =>
+        (stampIo(lines(i)) && !stampFile) ||
+          (lines(i).contains("_SUCCESS") && !cacheLines(i))
+      }.map(i => s"${rel(f)}:${i + 1}: ${lines(i).trim}")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

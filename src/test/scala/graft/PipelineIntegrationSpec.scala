@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.scaleops.TextAnalysis
-import graft.sources.{Artifacts, Sinks}
+import graft.sources.Sinks
 import graft.stats.Expectations
 
 /** End-to-end training-data pipeline: the round-3 operators composed
@@ -35,24 +35,22 @@ class PipelineIntegrationSpec extends SparkSpec {
     assert(nKept > 0 && nKept <= docs.count())
 
     // 3. Layout: Z-ordered write on (n_chars, quality), then compact
-    val root = java.nio.file.Files.createTempDirectory("graft-pipe")
-    try {
-      val dir = root.toString + "/docs"
-      val stats = kept.agg(min("n_chars"), max("n_chars")).head()
-      Sinks.writeZOrdered(kept, dir, "n_chars", "quality",
-        stats.getLong(0).toDouble, stats.getLong(1).toDouble, 0.0, 1.0,
-        numFiles = 8)
-      Sinks.compact(spark, dir, targetBytes = 512L << 20)
+    val root = tempDir("graft-pipe")
+    val dir = root.toString + "/docs"
+    val stats = kept.agg(min("n_chars"), max("n_chars")).head()
+    Sinks.writeZOrdered(kept, dir, "n_chars", "quality",
+      stats.getLong(0).toDouble, stats.getLong(1).toDouble, 0.0, 1.0,
+      numFiles = 8)
+    Sinks.compact(spark, dir, targetBytes = 512L << 20)
 
-      // 4. Read back: row count survives both rewrites; the filter is
-      // pushed to the parquet scan
-      val back = spark.read.parquet(dir)
-      assert(back.count() == nKept)
-      val filtered = back.filter(col("n_chars") > 500)
-      val plan = filtered.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters") && plan.contains("n_chars"))
-      assert(filtered.count() ==
-        kept.filter(col("n_chars") > 500).count())
-    } finally Artifacts.deleteRecursively(root)
+    // 4. Read back: row count survives both rewrites; the filter is
+    // pushed to the parquet scan
+    val back = spark.read.parquet(dir)
+    assert(back.count() == nKept)
+    val filtered = back.filter(col("n_chars") > 500)
+    val plan = filtered.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters") && plan.contains("n_chars"))
+    assert(filtered.count() ==
+      kept.filter(col("n_chars") > 500).count())
   }
 }

@@ -65,7 +65,7 @@ class SimilaritySpec extends SparkSpec {
     val emb2 = graft.sources.Tables.load(spark, sf, "embeddings")
     val queries = emb2.filter(col("vec_id") < 2)
     val idx = Similarity.ivfBuild(emb2, "vec_id", "embedding", nList = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf").toString
     Similarity.ivfSave(idx, dir)
     val loaded = Similarity.ivfLoad(spark, dir)
     val fresh = Similarity.ivfSearch(idx, "vec_id", "embedding", queries, 3)
@@ -516,7 +516,7 @@ class SimilaritySpec extends SparkSpec {
       k = 5, nList = 4, nProbe = 2, refine = 4)
       .collect().map(_.toSeq).toSet
     val index = Similarity.ivfBuild(real, "vec_id", "embedding", nList = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sq8").toString
+    val dir = tempDir("graft-sq8").toString
     Similarity.sq8Codes(index).write.mode("overwrite").parquet(dir)
     val viaDisk = Similarity.knnIvfSq8Indexed(index,
       spark.read.parquet(dir), "vec_id", "embedding", queries,
@@ -536,13 +536,14 @@ class SimilaritySpec extends SparkSpec {
         "j -> sin(id * 0.37 + j * 1.7) + 0.01 * j) as array<float>)")
         .as("embedding"))
     val q = emb.filter(col("vec_id") < 10)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fknn-memo").toString
-    def call() = Similarity.knnFilteredAuto(emb, "vec_id", "embedding",
-      col("vec_id") % 5 =!= 0, q, k = 5, reuse = 1000L,
-      knownN = Some(n), knownNFiltered = Some(6400L),
+    val dir = tempDir("graft-fknn-memo").toString
+    def call(seed: Long = 42L) = Similarity.knnFilteredAuto(emb, "vec_id",
+      "embedding", col("vec_id") % 5 =!= 0, q, k = 5, reuse = 1000L,
+      seed = seed, knownN = Some(n), knownNFiltered = Some(6400L),
       knownNQueries = Some(10L), knownDim = Some(64),
       indexDir = Some(dir))
+    def codebookFiles() =
+      new java.io.File(s"$dir/pq_cb").list().toSet
     val first = call()
     val route = Similarity.routeOf(first).map(_.chosen)
     assert(route.contains("ivf_pq"), s"expected the PQ route, got $route")
@@ -556,6 +557,15 @@ class SimilaritySpec extends SparkSpec {
     // the predicate
     assert(firstRows.forall(r =>
       r(2).asInstanceOf[Long] % 5 != 0))
+    // another seed is another index: the stamp misses, so the index is
+    // re-fit and the codebook derived from the old one is rewritten
+    val oldCodebook = codebookFiles()
+    val reseeded = Similarity.kmeansFits.get()
+    call(seed = 7L).collect()
+    assert(Similarity.kmeansFits.get() > reseeded,
+      "a different seed was served the seed-42 index")
+    assert(codebookFiles().nonEmpty && codebookFiles() != oldCodebook,
+      "pq_cb was not rewritten with the re-fit index")
   }
 
   test("ivfAddBatch: frozen-centroid ingest equals full-corpus transform") {
@@ -1209,7 +1219,7 @@ class SimilaritySpec extends SparkSpec {
         col("label") === 0, q, 3),
       Similarity.knnGraphAuto(emb.filter(col("vec_id") < 50), "vec_id",
         "embedding", 2))
-    val dir = java.nio.file.Files.createTempDirectory("graft-route").toString
+    val dir = tempDir("graft-route").toString
     val ops = Seq("nearDupPairsAuto", "knnAuto", "knnFilteredAuto",
       "knnGraphAuto")
     for ((df, op) <- routed.zip(ops)) {

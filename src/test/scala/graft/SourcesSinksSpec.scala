@@ -7,7 +7,7 @@ class SourcesSinksSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-sink").toString
+    tempDir("graft-sink").toString
 
   test("S1: CSV ingest infers schema and _row_id preserves file order") {
     val dir = tmp()
@@ -292,5 +292,69 @@ class SourcesSinksSpec extends SparkSpec {
     val avgY = spans.map(_._2).sum / spans.length
     assert(avgX < 160, s"avg x-span $avgX not clustered")
     assert(avgY < 160, s"avg y-span $avgY not clustered")
+  }
+
+  private def write(path: java.nio.file.Path, text: String): Unit = {
+    java.nio.file.Files.createDirectories(path.getParent)
+    java.nio.file.Files.writeString(path, text)
+  }
+  private def read(path: java.nio.file.Path): String =
+    java.nio.file.Files.readString(path)
+
+  test("memo: a fresh stamp skips the build and touches nothing") {
+    val dir = tempDir("graft-memo")
+    var builds = 0
+    def call() = graft.sources.Artifacts.memo(dir.toString, "A",
+      Seq("part")) { builds += 1; write(dir.resolve("part/x"), "v1") }
+    assert(!call() && builds == 1)
+    assert(read(dir.resolve("stamp")) == "A")
+    assert(call() && builds == 1)
+    assert(read(dir.resolve("part/x")) == "v1")
+  }
+
+  test("memo: a mismatched stamp deletes every listed part, keeps the " +
+    "rest of the dir, and rebuilds") {
+    val dir = tempDir("graft-memo")
+    write(dir.resolve("stamp"), "A")
+    write(dir.resolve("index/cells/p0"), "old")
+    write(dir.resolve("codes/p0"), "old")
+    write(dir.resolve("notes.txt"), "caller's file")
+    var partsAtBuild = Seq.empty[Boolean]
+    val fresh = graft.sources.Artifacts.memo(dir.toString, "B",
+      Seq("index", "codes", "absent")) {
+      partsAtBuild = Seq("stamp", "index", "codes")
+        .map(p => java.nio.file.Files.exists(dir.resolve(p)))
+      write(dir.resolve("index/cells/p1"), "new")
+    }
+    assert(!fresh)
+    // stale stamp and every listed part were gone before the build ran
+    assert(partsAtBuild == Seq(false, false, false))
+    assert(read(dir.resolve("stamp")) == "B")
+    assert(read(dir.resolve("index/cells/p1")) == "new")
+    assert(!java.nio.file.Files.exists(dir.resolve("index/cells/p0")))
+    assert(!java.nio.file.Files.exists(dir.resolve("codes")))
+    assert(read(dir.resolve("notes.txt")) == "caller's file")
+  }
+
+  test("memo: a build that throws leaves no stamp, so the OLD stamp " +
+    "value rebuilds instead of reading the half-built parts") {
+    val dir = tempDir("graft-memo")
+    graft.sources.Artifacts.memo(dir.toString, "A", Seq("index"))(
+      write(dir.resolve("index/p"), "built for A"))
+    intercept[IllegalStateException] {
+      graft.sources.Artifacts.memo(dir.toString, "B", Seq("index")) {
+        write(dir.resolve("index/p"), "half of B")
+        throw new IllegalStateException("died before the stamp")
+      }
+    }
+    assert(!java.nio.file.Files.exists(dir.resolve("stamp")))
+    var rebuilt = false
+    val fresh = graft.sources.Artifacts.memo(dir.toString, "A",
+      Seq("index")) {
+      rebuilt = true
+      write(dir.resolve("index/p"), "built for A")
+    }
+    assert(!fresh && rebuilt)
+    assert(read(dir.resolve("index/p")) == "built for A")
   }
 }

@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
   /** File stream sources need a directory — stage the single events
     * parquet into one (simulating a landing zone receiving files). */
   private lazy val streamDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = tempDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -66,7 +66,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming dedup drops a replayed batch of events") {
     import org.apache.spark.sql.functions._
     // stage the same file TWICE — a replayed landing-zone delivery
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup")
+    val dir = tempDir("graft-dedup")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events_a.parquet"))
@@ -91,7 +91,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // landing zone: originals, then a re-crawl with reversed word
     // order + different case + new ids — near-dups, not byte dups
-    val dir = java.nio.file.Files.createTempDirectory("graft-neardup")
+    val dir = tempDir("graft-neardup")
     val docs = Seq(
       (1L, "the quick brown fox"),
       (2L, "hello world again"),
@@ -100,7 +100,7 @@ class StreamingSpec extends SparkSpec {
     // the file source lists FLAT files — stage each delivery as a
     // single parquet file (coalesced write, part file moved up)
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-neardup-w")
+      val tmp = tempDir("graft-neardup-w")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).iterator()
       val it = new scala.collection.Iterator[java.nio.file.Path] {
@@ -133,7 +133,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("AvailableNow: stream to a parquet sink with checkpoint, then read back") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-sink-out")
+    val outDir = tempDir("graft-sink-out")
     val stream = EventsStream.readEvents(spark, streamDir)
     val q = EventsStream.tumblingCounts(stream)
       .writeStream
@@ -271,13 +271,13 @@ class StreamingSpec extends SparkSpec {
     val sentinelUser = 10000000L
     val gapMs = 1800000L
     val sentinelMs = maxMs + gapMs + 2 * hourMs + hourMs
-    val dir = java.nio.file.Files.createTempDirectory("graft-ets")
+    val dir = tempDir("graft-ets")
     import spark.implicits._
     for (f <- 0 to 3) {
       val rows =
         if (f == 3) Seq((sentinelUser, new java.sql.Timestamp(sentinelMs)))
         else ev.filter(r => fileOf(r._2.getTime) == f).toSeq
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-etsw$f")
+      val tmp = tempDir(s"graft-etsw$f")
       rows.toDF("user_id", "ts").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val part = new java.io.File(tmp.toString).listFiles()
@@ -340,9 +340,9 @@ class StreamingSpec extends SparkSpec {
       Seq(0L, (0.1 * h).toLong),            // session A (2 events)
       Seq(5 * h, (5.1 * h).toLong),         // session B (2 events)
       Seq(10 * h))                          // session C (1 event)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ets-prefix")
+    val dir = tempDir("graft-ets-prefix")
     def writeFile(idx: Int, user: Long, ts: Seq[Long]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-etsp$idx")
+      val tmp = tempDir(s"graft-etsp$idx")
       ts.map(ms => (user, new java.sql.Timestamp(ms)))
         .toDF("user_id", "ts").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
@@ -406,9 +406,9 @@ class StreamingSpec extends SparkSpec {
       val perFile = 5
       def sessionTs(sess: Int): Seq[Long] =
         (0 until 10).map(j => (sess * 45L + j) * m)
-      val dir = java.nio.file.Files.createTempDirectory("graft-ets-soak")
+      val dir = tempDir("graft-ets-soak")
       def writeFile(idx: Int, user: Long, ts: Seq[Long]): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft-etss$idx")
+        val tmp = tempDir(s"graft-etss$idx")
         ts.map(ms => (user, new java.sql.Timestamp(ms)))
           .toDF("user_id", "ts").coalesce(1)
           .write.mode("overwrite").parquet(tmp.toString)
@@ -493,9 +493,9 @@ class StreamingSpec extends SparkSpec {
     "loudly with the replay contract, never a silent wrong trajectory") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val watch = java.nio.file.Files.createTempDirectory("graft-cusum-ooo")
+    val watch = tempDir("graft-cusum-ooo")
     def land(name: String, rows: Seq[(Long, Long, Long, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cusum-tmp")
+      val tmp = tempDir("graft-cusum-tmp")
       rows.toDF("user_id", "us", "event_id", "value")
         .select(col("user_id"), timestamp_micros(col("us")).as("ts"),
           col("event_id"), col("value"))
@@ -545,7 +545,7 @@ class StreamingSpec extends SparkSpec {
     // user 1: exact-gap pair → ONE session (Spark merges on touch —
     // the oracle's islands SQL must use a strict >, not >=);
     // user 2: gap + 1 µs → TWO sessions
-    val dir = java.nio.file.Files.createTempDirectory("graft_sw").toString
+    val dir = tempDir("graft_sw").toString
     Seq((1L, 0L, 1L, "view", 1.0), (2L, gap, 1L, "view", 1.0),
       (3L, 0L, 2L, "view", 1.0), (4L, gap + 1L, 2L, "view", 1.0))
       .toDF("event_id", "us", "user_id", "event_type", "value")
