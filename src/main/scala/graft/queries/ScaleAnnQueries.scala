@@ -480,19 +480,6 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
       nList = 8, nProbe = 8)
   }
 
-  /** In-JVM residency for loaded IVF indexes: an index handle is a
-    * driver-side KMeansModel plus a LAZY scan of the cells parquet,
-    * and a hot index re-read from disk on every query batch is not
-    * how a serving path behaves — vector stores keep live indexes
-    * resident. Keyed by (session, dir, source fingerprint) so a
-    * regenerated dataset or a new session can never be served a stale
-    * handle. An access-ordered LRU (r12 verdict): at 33+ live
-    * consumers the old ConcurrentHashMap's `keys().nextElement()`
-    * eviction could drop the HOTTEST handle. [[graft.scaleops.LruCache]]
-    * carries the eviction contract (and its own spec pin). */
-  protected val ivfResident =
-    new graft.scaleops.LruCache[String, Similarity.IvfIndex](32)
-
   // stale-index guard: a memo is keyed by dataset DIR NAME, so a
   // regenerated dataset under the same path would otherwise serve an
   // index fitted on the old rows — surfacing as a baffling gate
@@ -513,8 +500,9 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
 
   /** Load a memoized on-disk IVF index, building + saving it through
     * [[Artifacts.memo]] on first use — the shared protocol of every
-    * prebuilt-index gate query. The resident handle is reused only when
-    * the memo was fresh. */
+    * prebuilt-index gate query. The resident model
+    * ([[Similarity.ivfLoadResident]]) is served only when the memo was
+    * fresh. */
   protected def ivfLoadOrBuild(s: SparkSession, baseDir: String, d: String,
                              tag: String = "")
                             (build: => Similarity.IvfIndex): Similarity.IvfIndex = {
@@ -522,18 +510,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     val fingerprint = embeddingsFingerprint(d, tag)
     val fresh = Artifacts.memo(dir, fingerprint, Similarity.ivfMemoParts)(
       Similarity.ivfSave(build, dir))
-    val key = s"${System.identityHashCode(s)}\n$dir\n$fingerprint"
-    // a rebuilt index replaced the cells a resident handle scans
-    (if (fresh) ivfResident.get(key) else None).getOrElse {
-      val loaded = Similarity.ivfLoad(s, dir)
-      // LRU at the cap, never clear(): r12's full clear at 8 entries
-      // thrashed EVERY prebuilt row in the same session, and r12's
-      // arbitrary-entry eviction could drop the hottest handle under
-      // 33+ live consumers. A handle is kilobytes of driver memory
-      // (centroids + a parquet path), so 32 is still nothing.
-      ivfResident.put(key, loaded)
-      loaded
-    }
+    Similarity.ivfLoadResident(s, dir, fingerprint, fresh)
   }
 
   /** Disk memo for a derived DataFrame (the [[ivfLoadOrBuild]]

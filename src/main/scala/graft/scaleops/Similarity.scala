@@ -3,6 +3,8 @@ package graft.scaleops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Cardinality
+
 /** Similarity search over embedding columns (`Array[Float]`) —
   * north-star additions (BASELINE.json).
   *
@@ -46,10 +48,24 @@ object Similarity {
       .withColumn(s"${as}norm",
         sqrt(graft.functions.ArrayDot(col(s"${as}v"), col(s"${as}v"))))
 
+  private def pairCosRaw(a: String, b: String): Column =
+    graft.functions.ArrayDot(col(s"${a}v"), col(s"${b}v")) /
+      (col(s"${a}norm") * col(s"${b}norm"))
+
   private def pairCos(a: String, b: String): Column =
-    round(
-      graft.functions.ArrayDot(col(s"${a}v"), col(s"${b}v")) /
-        (col(s"${a}norm") * col(s"${b}norm")), 6)
+    round(pairCosRaw(a, b), 6)
+
+  /** `pairCos(a, b) >= threshold`, rounding only the pairs that can
+    * pass. `round` on a double goes through `BigDecimal` (most of the
+    * brute pair join's CPU), and |round6(x) − x| ≤ 5e-7 + 2 ulp, so a
+    * pair with raw cosine below `threshold − 1e-6` cannot round up to
+    * `threshold`. The raw test comes first in the conjunction, so the
+    * rounding runs only where it passes; NaN and ±∞ compare alike on
+    * both sides, and a zero norm nulls or throws in the raw test just
+    * as it did in the rounded one. Bit-identical to the rounded test
+    * alone. */
+  private def pairCosAtLeast(a: String, b: String, threshold: Double): Column =
+    pairCosRaw(a, b) >= threshold - 1e-6 && pairCos(a, b) >= threshold
 
   /** Brute-force cosine top-k: for each query vector, the k nearest
     * neighbors (excluding itself), deterministically tie-broken on
@@ -85,9 +101,9 @@ object Similarity {
     val r = prepped(emb, idCol, vecCol, "b")
     l.crossJoin(r)
       .filter(col("a_id") < col("b_id"))
-      .withColumn("cos", pairCos("a", "b"))
-      .filter(col("cos") >= threshold)
-      .select(col("a_id").as("a"), col("b_id").as("b"), col("cos"))
+      .filter(pairCosAtLeast("a", "b", threshold))
+      .select(col("a_id").as("a"), col("b_id").as("b"),
+        pairCos("a", "b").as("cos"))
   }
 
   /** The 100 TB variant of [[nearDupPairs]]: bucket by random
@@ -198,11 +214,9 @@ object Similarity {
       .join(base, "a_id")
       .join(base.select(col("a_id").as("b_id"), col("av").as("bv"),
         col("anorm").as("bnorm")), "b_id")
-      .withColumn("cos", round(
-        graft.functions.ArrayDot(col("av"), col("bv")) /
-          (col("anorm") * col("bnorm")), 6))
-      .filter(col("cos") >= threshold)
-      .select(col("a_id").as("a"), col("b_id").as("b"), col("cos"))
+      .filter(pairCosAtLeast("a", "b", threshold))
+      .select(col("a_id").as("a"), col("b_id").as("b"),
+        pairCos("a", "b").as("cos"))
   }
 
   /** Random-hyperplane LSH bucket id (`numPlanes`-bit signature).
@@ -294,13 +308,15 @@ object Similarity {
   }
 
   /** [[nearDupPairsLsh]] with corpus-derived sizing — the production
-    * entry point (one extra count() pass; at 100 TB that's a
-    * metadata-cheap scan vs a quadratically-mis-sized candidate join). */
+    * entry point. The corpus size comes from [[Cardinality.rows]]:
+    * parquet footers on a plain scan, one count() otherwise — either
+    * way cheap next to a quadratically-mis-sized candidate join. */
   def nearDupPairsLshDerived(emb: DataFrame, idCol: String, vecCol: String,
                              threshold: Double, dim: Int,
                              targetBucket: Long = 512L,
                              targetRecall: Double = 0.85): DataFrame = {
-    val p = lshDerivedParams(emb.count(), threshold, targetBucket, targetRecall)
+    val p = lshDerivedParams(Cardinality.rows(emb), threshold, targetBucket,
+      targetRecall)
     stamped(nearDupPairsLsh(emb, idCol, vecCol, threshold, dim,
       p.numPlanes, p.numTables),
       Route("nearDupPairsLshDerived", Nil, "lsh", lsh = Some(p)))
@@ -358,7 +374,7 @@ object Similarity {
                        targetBucket: Long = 512L,
                        targetRecall: Double = 0.85,
                        minAdvantage: Double = 3.0): DataFrame = {
-    val n = emb.count()
+    val n = Cardinality.rows(emb)
     val p = lshDerivedParams(n, threshold, targetBucket, targetRecall)
     val tiers = nearDupPairsCosts(n, p)
     val r = Route("nearDupPairsAuto", tiers, routeLadder(tiers, minAdvantage),
@@ -479,7 +495,7 @@ object Similarity {
                     minCos: Double = 0.5,
                     targetBucket: Long = 512L,
                     targetRecall: Double = 0.95): DataFrame = {
-    val p = lshMultiProbeParams(emb.count(), minCos, targetBucket,
+    val p = lshMultiProbeParams(Cardinality.rows(emb), minCos, targetBucket,
       targetRecall)
     stamped(knnLsh(emb, idCol, vecCol, queries, k, dim, p.numPlanes,
       p.numTables, multiProbe = true, probeDepth = p.probeDepth),
@@ -550,7 +566,7 @@ object Similarity {
       .withColumn("fv", array_to_vector(col("neighborv")))
     // derived-sizing callers already counted the corpus for params —
     // accept that count instead of paying a second full-scan job
-    val n = knownN.getOrElse(prep.count())
+    val n = knownN.getOrElse(Cardinality.rows(prep))
     val fitCap = fitSampleCapFor(nList) // ≥ 4·k rows, never k > sample
     val fitSet =
       if (n <= fitCap) prep
@@ -625,6 +641,43 @@ object Similarity {
     IvfIndex(
       org.apache.spark.ml.clustering.KMeansModel.load(s"$dir/kmeans"),
       spark.read.parquet(s"$dir/cells"))
+
+  /** What a memo hit needs to serve its index: the fitted model and
+    * the cells table's schema. It holds no DataFrame and no session:
+    * cached index handles pinned the sessions they were loaded in,
+    * stopped ones included, and raised the heap. */
+  private final case class ResidentIvf(
+      model: org.apache.spark.ml.clustering.KMeansModel,
+      cellsSchema: org.apache.spark.sql.types.StructType)
+
+  /** In-JVM residency for memoized IVF indexes, keyed by (memo dir,
+    * stamp): a serving path keeps its live index resident instead of
+    * reloading it for every query batch (`ivfLoad` runs four Spark
+    * jobs: the model's metadata read, its data's schema and collect,
+    * and the cells' schema). An access-ordered LRU ([[LruCache]]): an
+    * arbitrary-entry eviction could drop the hottest model. A model
+    * is kilobytes of centroids, so 32 entries are still nothing. */
+  private val ivfResident = new LruCache[(String, String), ResidentIvf](32)
+
+  /** The IVF index of the memo at `dir` whose stamp is `stamp`; `fresh`
+    * is what [[graft.sources.Artifacts.memo]] returned for it. A fresh
+    * memo with a resident model launches no Spark job: its cells scan
+    * is rebuilt with the known schema, so nothing is inferred. A
+    * rebuilt memo, or one not yet resident, loads from disk and
+    * replaces the entry. */
+  private[graft] def ivfLoadResident(spark: org.apache.spark.sql.SparkSession,
+                                     dir: String, stamp: String,
+                                     fresh: Boolean): IvfIndex =
+    (if (fresh) ivfResident.get((dir, stamp)) else None) match {
+      case Some(r) =>
+        IvfIndex(r.model,
+          spark.read.schema(r.cellsSchema).parquet(s"$dir/cells"))
+      case None =>
+        val loaded = ivfLoad(spark, dir)
+        ivfResident.put((dir, stamp),
+          ResidentIvf(loaded.model, loaded.indexed.schema))
+        loaded
+    }
 
   /** Incrementally extend a prebuilt IVF index with a batch of new
     * vectors WITHOUT refitting: centroids stay frozen, the batch rows
@@ -1086,9 +1139,9 @@ object Similarity {
     // re-scan the corpus six times re-deriving the same three
     // COUNT(*)s plus two single-row dim probes
     val filtered = emb.filter(pred)
-    val n = knownN.getOrElse(emb.count())
-    val nF = knownNFiltered.getOrElse(filtered.count())
-    val nQ = knownNQueries.getOrElse(queries.count())
+    val n = knownN.getOrElse(Cardinality.rows(emb))
+    val nF = knownNFiltered.getOrElse(Cardinality.rows(filtered))
+    val nQ = knownNQueries.getOrElse(Cardinality.rows(queries))
     val dim = knownDim.getOrElse(
       if (n == 0) 0
       else emb.select(size(col(vecCol))).head().getInt(0))
@@ -1178,10 +1231,10 @@ object Similarity {
   }
 
   /** [[knnIvf]] with corpus-derived sizing — the production entry
-    * point (one count() pass buys a size-correct cell grid). */
+    * point ([[Cardinality.rows]] buys a size-correct cell grid). */
   def knnIvfDerived(emb: DataFrame, idCol: String, vecCol: String,
                     queries: DataFrame, k: Int, seed: Long = 42L): DataFrame = {
-    val n = emb.count()
+    val n = Cardinality.rows(emb)
     val p = ivfDerivedParams(n)
     stamped(knnIvf(emb, idCol, vecCol, queries, k, p.nList, p.nProbe, seed,
       knownN = Some(n)), Route("knnIvfDerived", Nil, "ivf", ivf = Some(p)))
@@ -1446,7 +1499,7 @@ object Similarity {
     // stages deep with a message about an internal 4k value
     require(k >= 1 && k <= 256,
       s"knnGraphAuto: k must be in [1, 256], got $k")
-    val n = emb.count()
+    val n = Cardinality.rows(emb)
     val tiers = knnGraphRouteCosts(n, k)
     val r = Route("knnGraphAuto", tiers,
       routeLadder(tiers, knnRouteMinAdvantage), ivf = Some(knnGraphParams(n)))
@@ -1572,7 +1625,7 @@ object Similarity {
       s"knnGraph: k must be in [1, 256], got $k (the seed cuts at 4·k " +
         "through the 1024-capped top-k aggregate)")
     // routed callers already counted the corpus — don't re-scan it
-    val n = knownN.getOrElse(emb.count())
+    val n = knownN.getOrElse(Cardinality.rows(emb))
     val p = knnGraphParams(n)
     // a shared/prebuilt quantizer must match THIS corpus's derived
     // sizing — a stale or foreign index would silently change seed
@@ -1662,7 +1715,8 @@ object Similarity {
     * artifacts WITH the index ([[ivfMemoParts]]): they are pure
     * functions of (index, corpus), and their caches below would
     * otherwise feed stale codes from the old corpus to the new index.
-    * A hit reads the stamp and loads the index, nothing more. */
+    * A hit reads the stamp and serves the resident model
+    * ([[ivfLoadResident]]): no Spark job. */
   private def ivfCachedIndex(spark: org.apache.spark.sql.SparkSession,
                              emb: DataFrame, idCol: String, vecCol: String,
                              p: IvfParams, seed: Long, n: Long, dim: Int,
@@ -1671,11 +1725,11 @@ object Similarity {
       case None =>
         ivfBuild(emb, idCol, vecCol, p.nList, seed, knownN = Some(n))
       case Some(dir) =>
-        graft.sources.Artifacts.memo(dir,
-          s"n=$n dim=$dim nList=${p.nList} seed=$seed", ivfMemoParts)(
+        val stamp = s"n=$n dim=$dim nList=${p.nList} seed=$seed"
+        val fresh = graft.sources.Artifacts.memo(dir, stamp, ivfMemoParts)(
           ivfSave(ivfBuild(emb, idCol, vecCol, p.nList, seed,
             knownN = Some(n)), dir))
-        ivfLoad(spark, dir)
+        ivfLoadResident(spark, dir, stamp, fresh)
     }
 
   /** PQ codebook + codes under the [[ivfCachedIndex]] memo: with an
@@ -1754,8 +1808,8 @@ object Similarity {
               queries: DataFrame, k: Int, reuse: Long = 1L,
               seed: Long = 42L, indexDir: Option[String] = None): DataFrame = {
     val spark = emb.sparkSession
-    val n = emb.count()
-    val nQ = queries.count()
+    val n = Cardinality.rows(emb)
+    val nQ = Cardinality.rows(queries)
     // empty corpus: head() on the dim probe would throw; dim 0 prices
     // brute at 0 bytes, which the ladder never leaves, and brute over
     // an empty corpus returns the correctly-shaped empty result
@@ -1790,7 +1844,7 @@ object Similarity {
   def knnIvfSq8Derived(emb: DataFrame, idCol: String, vecCol: String,
                        queries: DataFrame, k: Int, refine: Int = 4,
                        seed: Long = 42L): DataFrame = {
-    val n = emb.count()
+    val n = Cardinality.rows(emb)
     val p = ivfDerivedParams(n)
     stamped(knnIvfSq8(emb, idCol, vecCol, queries, k, p.nList, p.nProbe,
       refine, seed, knownN = Some(n)),
@@ -1944,7 +1998,7 @@ object Similarity {
               m: Int = 8, ks: Int = 256,
               knownN: Option[Long] = None): Array[Double] = {
     val prep = prepped(emb, idCol, vecCol, "neighbor")
-    val n = knownN.getOrElse(prep.count())
+    val n = knownN.getOrElse(Cardinality.rows(prep))
     val fit =
       if (n <= pqFitSampleCap) prep
       else prep.filter(pmod(xxhash64(col("neighbor_id")), lit(fitSampleModulus))
@@ -2082,7 +2136,7 @@ object Similarity {
                queries: DataFrame, k: Int, m: Int = 8, ks: Int = 256,
                refineOverride: Option[Int] = None,
                seed: Long = 42L): DataFrame = {
-    val n = emb.count()
+    val n = Cardinality.rows(emb)
     val p = ivfDerivedParams(n)
     val refine = refineOverride.getOrElse(pqDerivedRefine(n, p))
     val index = ivfBuild(emb, idCol, vecCol, p.nList, seed, knownN = Some(n))

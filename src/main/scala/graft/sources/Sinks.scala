@@ -56,23 +56,26 @@ object Sinks {
     * memo whose build already lands near its target, such as an index
     * append that unions a 1-file memo with its 1-file batch, is
     * written once. Builds are rare and memoized, so the resize
-    * rewrite is off the query path; the row count comes from parquet
-    * footers (no data recompute). */
+    * rewrite is off the query path. Sizing runs no Spark job: the
+    * written files are listed through the Hadoop `FileSystem` and
+    * their rows summed from the parquet footers on the driver
+    * ([[Cardinality]]); only the resize reads the artifact back. */
   def writeScanSized(df: DataFrame, path: String,
                      mode: SaveMode = SaveMode.Overwrite): Unit = {
     df.write.mode(mode).parquet(path)
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val back = spark.read.parquet(path)
-    val rows = back.count() // parquet footer metadata, not a data scan
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(sc.hadoopConfiguration)
+    val written = Cardinality.dataFiles(fs, hp)
+    val rows = Cardinality.fileRows(written, sc.hadoopConfiguration)
     val bytes = fs.getContentSummary(hp).getLength
     val files = math.max(1L, math.max(
       math.min(sc.defaultParallelism.toLong, rows / MinRowsPerFile),
       (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
-    val current = back.inputFiles.length
+    val current = written.length
     if (current < files || current > 2 * files) {
+      val back = spark.read.parquet(path)
       // resize via tmp + checked renames (the [[compact]] swap rule:
       // data always exists under SOME path; memo stamps are written
       // by callers AFTER this returns, so a crash mid-swap leaves a

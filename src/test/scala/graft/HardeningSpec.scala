@@ -8,8 +8,8 @@ import graft.streaming.EventsStream
 /** Pins the r5 hardening fixes (ADVICE r4 + VERDICT r4 #6): KLL
   * sketch input validation, PII pattern boundaries, SQ8 zero-norm
   * guard, mixture-sampling sign totality, the state-partition
-  * derivation rule, the one place a session conf is set, and the one
-  * memo stamp protocol. */
+  * derivation rule, the one place a session conf is set, the one
+  * memo stamp protocol, and footer row counts for the routers. */
 class HardeningSpec extends SparkSpec {
 
   private val mainRoot = new java.io.File("src/main/scala/graft")
@@ -195,6 +195,28 @@ class HardeningSpec extends SparkSpec {
           (lines(i).contains("_SUCCESS") && !cacheLines(i))
       }.map(i => s"${rel(f)}:${i + 1}: ${lines(i).trim}")
     }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("lint: router preludes and the scan-sized writer take row counts " +
+    "from Cardinality.rows") {
+    // a router's eager count() is a Spark job spent learning a number
+    // the parquet footers already hold; Cardinality.rows reads them and
+    // counts only a frame it cannot answer for
+    val banned = Map(
+      "scaleops/Similarity.scala" ->
+        "(emb\\.count\\(\\)|queries\\.count\\(\\)|getOrElse\\(.*count\\(\\))".r,
+      "sources/Sinks.scala" -> "\\.count\\(\\)".r)
+    val offenders = scalaFiles(mainRoot).flatMap { f =>
+      banned.get(rel(f)).toSeq.flatMap { re =>
+        val lines = java.nio.file.Files.readAllLines(f.toPath)
+          .toArray(Array.empty[String])
+        lines.indices.filter(i => re.findFirstIn(lines(i)).isDefined)
+          .map(i => s"${rel(f)}:${i + 1}: ${lines(i).trim}")
+      }
+    }
+    assert(banned.keys.forall(k => new java.io.File(mainRoot, k).isFile),
+      "a linted file moved")
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 

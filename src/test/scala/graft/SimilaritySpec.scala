@@ -1290,6 +1290,58 @@ class SimilaritySpec extends SparkSpec {
     assert(res.isEmpty)
   }
 
+  test("pair verify: the raw-cosine cut before rounding keeps exactly " +
+    "the pairs the rounded test keeps, at the rounding boundary") {
+    // (c, s) with c·c + s·s == 1.0 in the engine's left fold, so the
+    // cosine with the unit anchor (1, 0) is exactly c
+    def unitWithCos(c: Double): Array[Double] = {
+      val s0 = math.sqrt(1.0 - c * c)
+      val near = Iterator.iterate(s0)(math.nextUp).take(5).toSeq ++
+        Iterator.iterate(s0)(math.nextDown).slice(1, 5).toSeq
+      Array(c, near.find(s => 0.0 + c * c + s * s == 1.0).getOrElse(s0))
+    }
+    def round6(x: Double): Double =
+      new java.math.BigDecimal(java.lang.Double.toString(x))
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    val rnd = new scala.util.Random(11L)
+    Seq(0.5, 0.9).foreach { tau =>
+      val t = BigDecimal(tau)
+      val offsets = Seq(0.0, 1e-7, 4.9e-7, 5e-7).flatMap(d => Seq(d, -d)).distinct
+      // exact 6-dp half-ties (…5 in the 7th decimal) round up
+      val halfTies = (-3 to 2).map(j => (j + 0.5) * 1e-6)
+      val cosines = (offsets ++ halfTies).map(d => (t + BigDecimal(d)).toDouble) ++
+        Seq.fill(24)(tau + (rnd.nextDouble() * 2 - 1) * 3e-6)
+      val rows = Seq((0L, Array(1.0, 0.0)), (1L, Array(3.0, 0.0))) ++
+        cosines.zipWithIndex.map { case (c, i) => (10L + i, unitWithCos(c)) }
+      val df = rows.toDF("vec_id", "embedding")
+      val expected = df.as("l").crossJoin(df.as("r"))
+        .filter(col("l.vec_id") < col("r.vec_id"))
+        .select(col("l.vec_id").as("a"), col("r.vec_id").as("b"),
+          round(Similarity.cosine(col("l.embedding"), col("r.embedding")), 6)
+            .as("cos"))
+        .filter(col("cos") >= tau)
+        .collect().map(_.toSeq).toSet
+      val brute = Similarity.nearDupPairs(df, "vec_id", "embedding", tau)
+        .collect().map(_.toSeq).toSet
+      assert(brute == expected, s"tau=$tau")
+      // nearly every pair shares a bucket at 1 plane x 32 tables, so the
+      // LSH verify sees the same pairs
+      val lsh = Similarity.nearDupPairsLsh(df, "vec_id", "embedding", tau,
+        dim = 2, numPlanes = 1, numTables = 32).collect().map(_.toSeq).toSet
+      assert(lsh == expected, s"tau=$tau (lsh)")
+      // the boundary is really exercised: against the unit anchor the
+      // pairs kept are exactly those whose cosine rounds up to tau,
+      // raw cosines just below tau included
+      val anchorKept =
+        expected.collect { case Seq(0L, b: Long, _) if b >= 10L => b }
+      val shouldKeep = cosines.zipWithIndex
+        .collect { case (c, i) if round6(c) >= tau => 10L + i }.toSet
+      assert(anchorKept == shouldKeep, s"tau=$tau")
+      assert(cosines.exists(c => c < tau && round6(c) >= tau))
+      assert(cosines.exists(c => round6(c) < tau))
+    }
+  }
+
   test("lint: no scaleops code outside the route record reads or " +
     "writes column metadata") {
     // one record, one key: ad-hoc provenance stamps beside it would

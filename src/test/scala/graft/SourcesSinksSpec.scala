@@ -39,13 +39,20 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("bucketed table joins without an exchange on the bucket key") {
-    // managed tables land in ./spark-warehouse (static conf; gitignored)
-    Seq("orders_b", "lineitem_b").foreach { t =>
+    // managed tables land in the shared session's warehouse, which is
+    // whatever session the suite order left as the default (another
+    // suite's temp warehouse, or ./spark-warehouse): clean the paths
+    // the catalog will actually use, and remove a warehouse dir that
+    // only these tables created
+    val locs = Seq("orders_b", "lineitem_b").map { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(loc)
+      val loc = java.nio.file.Paths.get(spark.sessionState.catalog
+        .defaultTablePath(org.apache.spark.sql.catalyst.TableIdentifier(t)))
+      graft.sources.Artifacts.deleteRecursively(loc)
+      loc
     }
+    val warehouse = locs.head.getParent
+    val ownWarehouse = !java.nio.file.Files.exists(warehouse)
     val orders = Tables.load(spark, sf, "orders")
       .select("o_orderkey", "o_totalprice")
     Sinks.writeBucketed(orders, "orders_b", "o_orderkey", 4)
@@ -67,6 +74,7 @@ class SourcesSinksSpec extends SparkSpec {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
+      if (ownWarehouse) graft.sources.Artifacts.deleteRecursively(warehouse)
     }
   }
 
